@@ -27,6 +27,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bearysta_spark.cachescope import scoped_cache
 from bearysta_spark.colnames import qcol
 from bearysta_spark.engine.expr import (
     ExprCompileError,
@@ -39,6 +40,7 @@ from bearysta_spark.operators import filter_in, filter_out, pack, unpack
 from bearysta_spark.operators.aggregate import AGG_FUNCS, agg_expr
 from bearysta_spark.operators.expected import expected_fill, ordering_check
 from bearysta_spark.operators import ratio as ratio_ops
+from bearysta_spark.session import local_frame
 
 logger = logging.getLogger("bearysta_spark.engine")
 
@@ -209,7 +211,7 @@ class RecipeEngine:
             out = out.unionByName(df, allowMissingColumns=True)
         if len(frames) > 1:
             # children are reused by ratio joins etc. — cache the union
-            out = out.cache()
+            out = scoped_cache(out)
         return out
 
     # -- normalized ---------------------------------------------------
@@ -247,7 +249,10 @@ class RecipeEngine:
             if col not in df.columns:
                 raise RecipeError(f'Column "{col}" specified in config but not found')
 
-        df = infer_numeric(df)
+        if r.filter_in:
+            # dropping rows can leave a column all-numeric; without
+            # filter-in the frame is the one the pass above just probed
+            df = infer_numeric(df)
 
         missing = [c for c in r.values if c not in df.columns]
         if missing:
@@ -398,7 +403,7 @@ class RecipeEngine:
         result = self._eval_frame_lambda(df.toPandas(), expr)
         res_pdf, origin = result
         res_pdf = res_pdf.rename(columns={origin: col})
-        rdf = self.spark.createDataFrame(res_pdf)
+        rdf = local_frame(self.spark, res_pdf)
         right = df.drop(col) if col in df.columns else df
         shared = [c for c in rdf.columns if c in right.columns]
         if not shared:

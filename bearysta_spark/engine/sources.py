@@ -18,7 +18,9 @@ Spark-first shape of the reference's per-file reader (aggregate.py:134-314):
    when the file's first line differs from it).
 4. Lineage columns Path/File/Directory (S6) and `.meta` sidecar
    constants (S7) are attached per file; sidecars are driver-loaded
-   (tiny YAML) and broadcast-joined on Path.
+   (tiny YAML) into a JVM-local frame (`session.local_frame`, a
+   LocalRelation, so no action replays it through Python workers) and
+   broadcast-joined on Path.
 5. SQLite (S8) reads driver-side via the stdlib sqlite3 module — a
    sqlite file is single-machine by construction; at scale this input
    becomes JDBC/parquet.
@@ -34,8 +36,20 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
+from bearysta_spark.cachescope import scoped_cache
 from bearysta_spark.engine.recipe import Recipe, RecipeError
+from bearysta_spark.session import local_frame
+
+_CHUNK_SPEC = StructType(
+    [
+        StructField("path", StringType()),
+        StructField("chunk_id", IntegerType()),
+        StructField("off", LongType()),
+        StructField("length", LongType()),
+    ]
+)
 
 
 def expand_globs(patterns: list[str]) -> list[str]:
@@ -232,9 +246,9 @@ def chunked_lines_df(
         n = max(1, -(-size // chunk))
         for i in range(n):
             specs.append((fn, i, i * chunk, min(chunk, size - i * chunk)))
-    sdf = spark.createDataFrame(
-        specs, "path string, chunk_id int, off long, length long"
-    ).repartition(min(len(specs), spark.sparkContext.defaultParallelism))
+    sdf = local_frame(spark, specs, _CHUNK_SPEC).repartition(
+        min(len(specs), spark.sparkContext.defaultParallelism)
+    )
     indexed = _line_filter_fn_indexed(filters or {})
     has_filters = bool(filters)
 
@@ -299,7 +313,7 @@ def scan_csv(
         spark, files, line_filter, split_files_over_mb=split_files_over_mb
     )
     if line_filter:
-        lines = lines.cache()
+        lines = scoped_cache(lines)
 
     # header decision per file: first surviving line
     firsts = {
@@ -353,7 +367,7 @@ def scan_csv(
         parsed.append(df)
 
     if not parsed:
-        return spark.createDataFrame([], schema="Path string")
+        return local_frame(spark, [], StructType([StructField("Path", StringType())]))
 
     out = parsed[0]
     for df in parsed[1:]:
@@ -397,7 +411,9 @@ def attach_sidecar_meta(
         tuple([p] + [None if k not in m else str(m[k]) for k in keys])
         for p, m in metas.items()
     ]
-    meta_df = spark.createDataFrame(rows, schema=["Path"] + keys)
+    meta_df = local_frame(
+        spark, rows, StructType([StructField(k, StringType()) for k in ["Path", *keys]])
+    )
     # reference `df.assign(**meta)` OVERWRITES same-named data columns —
     # drop the data-side column so the sidecar value wins
     overlap = [k for k in keys if k in df.columns]
@@ -468,7 +484,7 @@ def scan_sqlite(spark: SparkSession, files: list[str], table: str | None) -> Dat
         pdf["Directory"] = os.path.dirname(fn) or "."
         frames.append(pdf)
     out = pd.concat(frames, ignore_index=True)
-    return spark.createDataFrame(out)
+    return local_frame(spark, out)
 
 
 def _with_lineage(df: DataFrame) -> DataFrame:

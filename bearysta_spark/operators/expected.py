@@ -22,8 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bearysta_spark.colnames import qcol
-
 from bearysta_spark.operators.aggregate import agg_expr
+from bearysta_spark.session import local_frame
 
 
 def expected_fill(
@@ -41,7 +41,8 @@ def expected_fill(
     keys = [*axis, *variants]
 
     rows = [tuple(e) if isinstance(e, (list, tuple)) else (e,) for e in expected]
-    exp_df = spark.createDataFrame(rows, schema=series)
+    # column types as createDataFrame infers them from the Python values
+    exp_df = local_frame(spark, rows, spark._inferSchemaFromList(rows, names=series))  # noqa: SLF001
 
     groups = df.select(*keys).distinct() if keys else spark.range(1).select()
     wanted = groups.crossJoin(F.broadcast(exp_df)) if keys else exp_df

@@ -10,8 +10,13 @@ from __future__ import annotations
 
 import os
 import tempfile
+from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+import pandas as pd
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def get_spark(app_name: str = "bearysta_spark", cpus: int | None = None) -> SparkSession:
@@ -47,3 +52,36 @@ def get_spark(app_name: str = "bearysta_spark", cpus: int | None = None) -> Spar
         )
     )
     return builder.getOrCreate()
+
+
+def local_frame(
+    spark: SparkSession,
+    rows: Sequence[Sequence[object]] | pd.DataFrame,
+    schema: StructType | None = None,
+) -> DataFrame:
+    """A small driver-built frame that stays inside the JVM.
+
+    `createDataFrame` over a Python list (and over pandas with the Arrow
+    conf off) plans a `LogicalRDD` over a `PythonRDD`: every action that
+    reads the frame opens a stage of Python-worker tasks that replay the
+    pickled rows. Handed a `pyarrow.Table`, Spark builds a
+    `LocalRelation` instead, whatever `spark.sql.execution.arrow.pyspark
+    .enabled` says, and the rows are read as a local table scan.
+
+    `rows` is a sequence of tuples aligned with `schema`, or a pandas
+    frame; for a pandas frame `schema` may be omitted, and the column
+    types are then Arrow's inference from its dtypes (what
+    `createDataFrame` infers with the Arrow conf on).
+    """
+    if isinstance(rows, pd.DataFrame):
+        table = pa.Table.from_pandas(rows, preserve_index=False)
+        return spark.createDataFrame(table, schema=schema)
+    if schema is None:
+        raise TypeError("local_frame needs a StructType schema for row input")
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema=schema)

@@ -11,6 +11,7 @@ import sqlite3
 import textwrap
 
 import pytest
+import yaml
 from pyspark.sql import functions as F
 
 from bearysta_spark.engine import Recipe, RecipeEngine
@@ -575,3 +576,125 @@ def test_recipe_split_large_files_equals_wholetext(spark, tmp_path):
     chunked = {(r["Vendor"], r["Size"], r["MOPS"]) for r in RecipeEngine(spark, split).aggregated().collect()}
     assert chunked == plain
     assert len(plain) == 7
+
+
+# ---------------------------------------------------------------------------
+# S7 sidecar semantics: per-file `.meta` constants joined on Path
+# ---------------------------------------------------------------------------
+
+
+def _scan_rows(spark, files):
+    from bearysta_spark.engine.sources import scan_csv
+
+    return {r["File"]: r.asDict() for r in scan_csv(spark, [str(f) for f in files]).collect()}
+
+
+def test_sidecar_disjoint_keys_and_missing_sidecar_give_nulls(spark, tmp_path):
+    a = write(tmp_path / "a.csv", "x\n1\n")
+    b = write(tmp_path / "b.csv", "x\n2\n")
+    c = write(tmp_path / "c.csv", "x\n3\n")
+    write(tmp_path / "a.csv.meta", "only_a: va\n")
+    write(tmp_path / "b.csv.meta", "only_b: vb\n")
+    rows = _scan_rows(spark, [a, b, c])
+    assert (rows["a.csv"]["only_a"], rows["a.csv"]["only_b"]) == ("va", None)
+    assert (rows["b.csv"]["only_a"], rows["b.csv"]["only_b"]) == (None, "vb")
+    # c.csv has no sidecar at all
+    assert (rows["c.csv"]["only_a"], rows["c.csv"]["only_b"]) == (None, None)
+
+
+def test_sidecar_key_overwrites_same_named_csv_column(spark, tmp_path):
+    a = write(tmp_path / "a.csv", "env_name,x\nfrom_csv,1\nfrom_csv,2\n")
+    write(tmp_path / "a.csv.meta", "env_name: from_meta\n")
+    from bearysta_spark.engine.sources import scan_csv
+
+    out = scan_csv(spark, [a])
+    assert out.columns.count("env_name") == 1
+    assert [r["env_name"] for r in out.collect()] == ["from_meta", "from_meta"]
+
+
+def test_sidecar_yaml_scalars_render_as_str(spark, tmp_path):
+    a = write(tmp_path / "a.csv", "x\n1\n")
+    write(tmp_path / "a.csv.meta", "threads: 8\nscale: 2.5\nturbo: true\n")
+    row = _scan_rows(spark, [a])["a.csv"]
+    assert (row["threads"], row["scale"], row["turbo"]) == ("8", "2.5", "True")
+
+
+def test_sidecar_keys_with_space_and_backtick(spark, tmp_path):
+    a = write(tmp_path / "a.csv", "x\n1\n")
+    write(tmp_path / "a.csv.meta", "'host name': h1\n'odd`key': k1\n")
+    row = _scan_rows(spark, [a])["a.csv"]
+    assert (row["host name"], row["odd`key"]) == ("h1", "k1")
+
+
+# ---------------------------------------------------------------------------
+# numeric inference passes and the engine's cache lifetime
+# ---------------------------------------------------------------------------
+
+
+def _collects_during(monkeypatch, spark, fn) -> int:
+    cls = type(spark.range(1))
+    inner = cls.collect
+    calls = []
+
+    def counting(self):
+        calls.append(1)
+        return inner(self)
+
+    with monkeypatch.context() as m:
+        m.setattr(cls, "collect", counting)
+        fn()
+    return len(calls)
+
+
+def test_no_filter_in_skips_the_third_inference_pass(spark, tmp_path, monkeypatch):
+    csv = write(tmp_path / "r.csv", "name,x\nabc,1\ndef,2\n")
+    base = {
+        "input": {"path": csv, "format": "csv"},
+        "aggregation": "sum",
+        "series": ["name"],
+        "values": ["x"],
+    }
+    keep_all = {**base, "filter-in": {"name": ["abc", "def"]}}
+    without = _collects_during(monkeypatch, spark, lambda: RecipeEngine(spark, base).normalized())
+    with_fi = _collects_during(monkeypatch, spark, lambda: RecipeEngine(spark, keep_all).normalized())
+    assert without == with_fi - 1
+
+
+def test_filter_in_dropping_non_numeric_rows_promotes_the_column(spark, tmp_path):
+    csv = write(tmp_path / "r.csv", "status,x\nok,1\nok,2\nbad,n/a\n")
+    recipe = {
+        "input": {"path": csv, "format": "csv"},
+        "filter-in": {"status": ["ok"]},
+        "aggregation": "sum",
+        "series": ["status"],
+        "values": ["x"],
+    }
+    eng = RecipeEngine(spark, recipe)
+    assert dict(eng.normalized().dtypes)["x"] == "double"
+    assert [(r["status"], r["x"]) for r in eng.aggregated().collect()] == [("ok", 3.0)]
+
+
+def test_engine_caches_are_released_by_scope_end(spark, tmp_path):
+    from bearysta_spark.cachescope import release_scoped_caches
+
+    def persistent(s):
+        return {int(k) for k in s.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
+
+    log = write(tmp_path / "data" / "run.out", "@ noise\nA,1\nB,2\n")
+    spec = {
+        "input": {"path": log, "format": "csv", "csv-header": "k,v", "filter": {"^@": "drop", "": None}},
+        "aggregation": "sum",
+        "series": ["k"],
+        "values": ["v"],
+    }
+    child = write(tmp_path / "child.yml", yaml.safe_dump(spec))
+    # the parent scans the same log (line-filter cache) and unions the
+    # child's normalized frame (union cache)
+    parent = {**spec, "input": {**spec["input"], "config": [child]}}
+    release_scoped_caches()
+    before = persistent(spark)
+    out = RecipeEngine(spark, Recipe(parent)).aggregated()
+    assert sorted((r["k"], r["v"]) for r in out.collect()) == [("A", 2.0), ("B", 4.0)]
+    assert persistent(spark) - before  # the scan and union caches are pinned
+    release_scoped_caches()
+    assert persistent(spark) == before

@@ -60,6 +60,37 @@ def test_cli_end_to_end(tmp_path, capsys, spark):
     assert "Prefix" in out
 
 
+def test_cli_releases_engine_caches(tmp_path, capsys, spark):
+    from bearysta_spark.cachescope import release_scoped_caches
+
+    def persistent():
+        return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
+
+    data = tmp_path / "d.out"
+    data.write_text("@ noise\na,1.0\nb,4.0\n")
+    cfg = tmp_path / "r.yml"
+    cfg.write_text(
+        textwrap.dedent(
+            f"""\
+            input:
+                path: '{data}'
+                format: csv
+                csv-header: Prefix,Time
+                filter: {{'^@': drop, '': null}}
+            aggregation: mean
+            series: [Prefix]
+            values: [Time]
+            """
+        )
+    )
+    release_scoped_caches()
+    before = persistent()
+    # the line filter makes the scan cache its filtered lines
+    assert cli_main([str(cfg), "--csv", "-"]) == 0
+    assert "4.000" in capsys.readouterr().out
+    assert persistent() == before
+
+
 def test_to_parquet_partitioned(spark, tmp_path):
     import os
 
