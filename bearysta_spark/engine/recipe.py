@@ -8,6 +8,7 @@ by the pipeline (hard errors at :567-583).
 
 from __future__ import annotations
 
+import math
 import os
 from dataclasses import dataclass, field
 from typing import Any
@@ -87,10 +88,21 @@ class Recipe:
     @property
     def split_files_over_mb(self) -> float | None:
         """Engine extension (not in the reference's config surface):
-        route input files larger than this through the record-boundary
-        splitter so one multi-GB log parallelizes across executors."""
+        split input files larger than this into byte ranges of this size
+        so one multi-GB log parallelizes across executors."""
         v = self.input.get("split-files-over-mb")
-        return float(v) if v is not None else None
+        if v is None:
+            return None
+        try:
+            mb = float(v)
+        except (TypeError, ValueError):
+            mb = math.nan
+        if isinstance(v, bool) or not math.isfinite(mb) or mb * 1024 * 1024 < 1:
+            raise RecipeError(
+                f"input.split-files-over-mb must be a number of MB of at least "
+                f"one byte, got {v!r}"
+            )
+        return mb
 
     @property
     def rename(self) -> dict:

@@ -7,20 +7,21 @@ Spark-first shape of the reference's per-file reader (aggregate.py:134-314):
    same way.
 2. The line-level regex preprocessor (S3) is inherently sequential per
    file (`append` folds a line into the previous line, chains allowed),
-   so it runs as an Arrow-batched mapInPandas over (one file per row)
-   whole-file texts: parallel across files, sequential within a file —
-   exactly the reference's semantics, scaled out. Runner logs are
-   many-small-files, so per-file parallelism is the right axis; a
-   single multi-GB log would need a record-boundary splitter instead
-   (documented limitation).
-3. CSV parsing of surviving lines is distributed (`from_csv` per line
-   group), with header sniffing per file (S4: injected header used only
-   when the file's first line differs from it).
-4. Lineage columns Path/File/Directory (S6) and `.meta` sidecar
-   constants (S7) are attached per file; sidecars are driver-loaded
-   (tiny YAML) into a JVM-local frame (`session.local_frame`, a
-   LocalRelation, so no action replays it through Python workers) and
-   broadcast-joined on Path.
+   so one byte-range reader (`lines_df`) runs it as an Arrow-batched
+   mapInPandas over driver-planned chunk specs: parallel across files,
+   sequential within a chunk. A file is one whole-file chunk unless the
+   recipe sets `split-files-over-mb`; then a multi-GB log splits at
+   line boundaries and each chunk replays a few lines of context.
+3. Executors open the driver's literal (absolute) paths, so a name with
+   a space, `%`, `#`, `[` or `{` reads as itself. CSV parsing of
+   surviving lines is distributed (`from_csv` per line group), with
+   header sniffing per file (S4: injected header used only when the
+   file's first surviving line differs from it).
+4. Lineage columns Path/File/Directory (S6) come from those same paths;
+   `.meta` sidecar constants (S7) are driver-loaded (tiny YAML) into a
+   JVM-local frame (`session.local_frame`, a LocalRelation, so no
+   action replays it through Python workers) and broadcast-joined on
+   Path.
 5. SQLite (S8) reads driver-side via the stdlib sqlite3 module — a
    sqlite file is single-machine by construction; at scale this input
    becomes JDBC/parquet.
@@ -32,9 +33,11 @@ import glob as globmod
 import os
 import re
 from collections.abc import Iterator
+from functools import reduce
+from operator import or_
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
@@ -99,85 +102,17 @@ def _line_filter_fn_indexed(filters: dict[str, str | None]):
     return filter_lines
 
 
-def _split_lines(text: str) -> list[str]:
-    """One line-boundary definition for both read paths: records split on
-    '\\n' only, trailing '\\r's stripped — exactly what the chunked reader
-    (_read_chunk) produces. str.splitlines() would also break on lone \\r,
-    \\x85, \\u2028 etc., making (line_no, line) depend on whether a file
-    crossed the split-files-over-mb threshold."""
-    lines = text.split("\n")
-    if lines and lines[-1] == "":
-        lines.pop()
-    return [ln.rstrip("\r") for ln in lines]
-
-
-def _line_filter_fn(filters: dict[str, str | None]):
-    indexed = _line_filter_fn_indexed(filters)
-
-    def filter_lines(text: str) -> list[str]:
-        return [line for _, line in indexed(_split_lines(text))]
-
-    return filter_lines
-
-
-def filtered_lines_df(
-    spark: SparkSession,
-    files: list[str],
-    filters: dict[str, str | None] | None,
-    split_files_over_mb: float | None = None,
-) -> DataFrame:
-    """DataFrame of (path, line_no, line) after the line filter.
-
-    Reads whole files (spark.read.text wholetext) so the sequential
-    `append` semantics hold; the filter runs in executors via
-    mapInPandas (Arrow batches of files). Runner output is many small
-    files, so file count is the parallelism axis.
-
-    split_files_over_mb routes files larger than the threshold through
-    the record-boundary splitter (chunked_lines_df) instead, so one
-    multi-GB file no longer pins a single task/heap — see that function
-    for the `append`-context overlap bound."""
-    if split_files_over_mb is not None:
-        thresh = split_files_over_mb * 1024 * 1024
-        big = [f for f in files if os.path.getsize(f) > thresh]
-        small = [f for f in files if f not in big]
-        if big:
-            parts = [chunked_lines_df(spark, big, filters, chunk_mb=split_files_over_mb)]
-            if small:
-                parts.append(filtered_lines_df(spark, small, filters))
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return out
-
-    text = (
-        spark.read.text(files, wholetext=True)
-        .withColumn("path", F.input_file_name())
-        .select("path", "value")
-    )
-    fn = _line_filter_fn(filters or {})
-
-    def proc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path, value in zip(pdf["path"], pdf["value"]):
-                for i, line in enumerate(fn(value) if filters else _split_lines(value)):
-                    rows.append((path, i, line))
-            yield pd.DataFrame(rows, columns=["path", "line_no", "line"])
-
-    return text.mapInPandas(proc, schema="path string, line_no long, line string")
-
-
 def _read_chunk(
-    path: str, off: int, length: int, overlap_lines: int, back_bytes: int = 1 << 20
+    path: str, off: int, length: int, overlap_lines: int = 8, back_bytes: int = 1 << 20
 ) -> tuple[list[str], list[str]]:
     """Read one byte-range of a text file at line granularity, Hadoop
     LineRecordReader convention: a chunk at off>0 discards the first
     (possibly partial) line — its predecessor reads one line past its
-    end — so every line is owned by exactly one chunk. Returns
-    (context_lines, owned_lines): context is up to `overlap_lines`
-    complete lines immediately before the owned region, replayed through
-    the filter for `append`/prev-line state."""
+    end — so every line is owned by exactly one chunk. Lines split on
+    '\\n' only, trailing '\\r's stripped. Returns (context_lines,
+    owned_lines): context is up to `overlap_lines` complete lines
+    immediately before the owned region, replayed through the filter
+    for `append`/prev-line state."""
     end = off + length
     with open(path, "rb") as f:
         f.seek(off)
@@ -212,45 +147,30 @@ def _read_chunk(
     return ctx, owned
 
 
-def chunked_lines_df(
+def lines_df(
     spark: SparkSession,
     files: list[str],
     filters: dict[str, str | None] | None,
-    chunk_mb: float = 64.0,
-    overlap_lines: int = 8,
+    chunk_mb: float | None = None,
 ) -> DataFrame:
-    """Record-boundary splitter: (path, line_no, line) for large single
-    files, split into ~chunk_mb byte ranges processed in parallel.
+    """(path, chunk_id, local_idx, line) after the line filter; a file's
+    lines are in (chunk_id, local_idx) order.
 
-    Why: the wholetext scan is one row (one task, one heap) per file —
-    right for runner output (many small files), wrong for one multi-GB
-    log. Here the driver plans byte-range chunk specs from file sizes
-    (metadata only), executors read their range at line granularity
-    (_read_chunk), and the sequential filter replays `overlap_lines` of
-    context before each chunk so prev-line state (`append` gluing,
-    substitutions) is reconstructed. Correctness bound: a chain of
-    consecutive `append` lines longer than overlap_lines would be
-    mis-glued — raise overlap_lines to the longest expected wrapped
-    record (shipped recipes wrap at most one line).
-
-    Global line_no needs each chunk's output count: a tiny per-chunk
-    count aggregate (rows = number of chunks) is cumulative-summed and
-    broadcast back — no giant window partition over the file's rows.
-    The chunk data is read twice (count pass + emit pass), the standard
-    trade for global indexing without materializing the file.
-    """
-    chunk = int(chunk_mb * 1024 * 1024)
+    The driver plans byte-range chunk specs from file sizes: one chunk
+    per file, or ~chunk_mb ranges when set, so one multi-GB log does not
+    pin a single task. Executors open the driver's literal paths
+    (_read_chunk) and replay `overlap_lines` (8) of context before each
+    chunk so prev-line state (`append` gluing) is reconstructed: a chain
+    of consecutive `append` lines longer than that would be mis-glued
+    (shipped recipes wrap at most one line)."""
+    chunk = int(chunk_mb * 1024 * 1024) if chunk_mb is not None else None
     specs = []
     for fn in files:
         size = os.path.getsize(fn)
-        n = max(1, -(-size // chunk))
-        for i in range(n):
-            specs.append((fn, i, i * chunk, min(chunk, size - i * chunk)))
-    sdf = local_frame(spark, specs, _CHUNK_SPEC).repartition(
-        min(len(specs), spark.sparkContext.defaultParallelism)
-    )
+        step = chunk or max(size, 1)
+        for i in range(max(1, -(-size // step))):
+            specs.append((fn, i, i * step, min(step, size - i * step)))
     indexed = _line_filter_fn_indexed(filters or {})
-    has_filters = bool(filters)
 
     def proc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -258,45 +178,20 @@ def chunked_lines_df(
             for path, cid, off, length in zip(
                 pdf["path"], pdf["chunk_id"], pdf["off"], pdf["length"]
             ):
-                ctx, owned = _read_chunk(path, int(off), int(length), overlap_lines)
-                if has_filters:
-                    outs = [
-                        line
-                        for idx, line in indexed(ctx + owned)
-                        if idx >= len(ctx)
-                    ]
-                else:
-                    outs = owned
+                ctx, owned = _read_chunk(path, int(off), int(length))
+                outs = (
+                    [line for idx, line in indexed(ctx + owned) if idx >= len(ctx)]
+                    if filters
+                    else owned
+                )
                 rows.extend((path, int(cid), i, line) for i, line in enumerate(outs))
             yield pd.DataFrame(
                 rows, columns=["path", "chunk_id", "local_idx", "line"]
             )
 
-    raw = sdf.mapInPandas(
+    return local_frame(spark, specs, _CHUNK_SPEC).mapInPandas(
         proc, schema="path string, chunk_id int, local_idx long, line string"
     )
-    counts = raw.groupBy("path", "chunk_id").agg(F.count("*").alias("n"))
-    w = (
-        Window.partitionBy("path")
-        .orderBy("chunk_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.withColumn(
-        "offset", F.coalesce(F.sum("n").over(w), F.lit(0))
-    ).select("path", "chunk_id", "offset")
-    return (
-        raw.join(F.broadcast(offsets), ["path", "chunk_id"])
-        .select(
-            "path",
-            (F.col("offset") + F.col("local_idx")).alias("line_no"),
-            "line",
-        )
-    )
-
-
-def _norm_path(p: str) -> str:
-    # input_file_name returns file:/// URIs
-    return re.sub(r"^file:/*", "/", p)
 
 
 def scan_csv(
@@ -309,17 +204,19 @@ def scan_csv(
     """Distributed CSV scan with line preprocessing, header sniff,
     lineage columns and sidecar metadata. All columns load as strings;
     numeric promotion is the engine's inference pass (P2)."""
-    lines = filtered_lines_df(
-        spark, files, line_filter, split_files_over_mb=split_files_over_mb
-    )
+    # one spelling for the reader's paths, Path, the sidecar key and the
+    # header lookup
+    files = [os.path.abspath(f) for f in files]
+    lines = lines_df(spark, files, line_filter, chunk_mb=split_files_over_mb)
     if line_filter:
         lines = scoped_cache(lines)
 
-    # header decision per file: first surviving line
-    firsts = {
-        _norm_path(r["path"]): r["line"]
-        for r in lines.filter(F.col("line_no") == 0).collect()
-    }
+    # header decision per file: first surviving line, i.e. line 0 of the
+    # file's lowest chunk with any output
+    firsts: dict[str, tuple[int, str]] = {}
+    for r in lines.filter(F.col("local_idx") == 0).collect():
+        first = (r["chunk_id"], r["line"])
+        firsts[r["path"]] = min(firsts.get(r["path"], first), first)
 
     def header_of(first_line: str | None) -> tuple[list[str], bool]:
         """→ (column names, file_has_header_row)"""
@@ -331,35 +228,34 @@ def scan_csv(
             return (injected, has)
         return [c.strip() for c in first_line.split(",")], True
 
-    # group files by their effective column list
+    # group files by their effective column list; header rows are keyed
+    # by the chunk that holds them
     groups: dict[tuple, dict] = {}
     for path in files:
-        cols, has_hdr = header_of(firsts.get(os.path.abspath(path), firsts.get(path)))
+        cid, first_line = firsts.get(path, (None, None))
+        cols, has_hdr = header_of(first_line)
         if not cols:
             continue  # empty / fully-filtered file (S5) — tolerated with no rows
-        key = tuple(cols)
-        g = groups.setdefault(key, {"has_header": {}, "paths": []})
+        g = groups.setdefault(tuple(cols), {"paths": [], "header_at": {}})
         g["paths"].append(path)
-        g["has_header"][path] = has_hdr
+        if has_hdr:
+            g["header_at"].setdefault(cid, []).append(path)
 
     parsed: list[DataFrame] = []
     for cols, g in groups.items():
         schema = ", ".join(f"`{c}` string" for c in cols)
-        sub = lines.filter(
-            F.regexp_replace("path", "^file:/*", "/").isin(
-                [os.path.abspath(p) for p in g["paths"]]
+        sub = lines.filter(F.col("path").isin(g["paths"]))
+        if g["header_at"]:
+            is_header = reduce(
+                or_,
+                [
+                    (F.col("chunk_id") == cid) & F.col("path").isin(paths)
+                    for cid, paths in g["header_at"].items()
+                ],
             )
-        )
-        hdr_paths = [os.path.abspath(p) for p, h in g["has_header"].items() if h]
-        if hdr_paths:
-            sub = sub.filter(
-                ~(
-                    (F.col("line_no") == 0)
-                    & F.regexp_replace("path", "^file:/*", "/").isin(hdr_paths)
-                )
-            )
+            sub = sub.filter(~((F.col("local_idx") == 0) & is_header))
         df = sub.select(
-            F.regexp_replace("path", "^file:/*", "/").alias("Path"),
+            F.col("path").alias("Path"),
             F.from_csv(
                 "line", schema, {"ignoreLeadingWhiteSpace": "true", "mode": "PERMISSIVE"}
             ).alias("r"),
@@ -369,17 +265,10 @@ def scan_csv(
     if not parsed:
         return local_frame(spark, [], StructType([StructField("Path", StringType())]))
 
-    out = parsed[0]
-    for df in parsed[1:]:
-        out = out.unionByName(df, allowMissingColumns=True)
-
-    out = out.withColumn("File", F.element_at(F.split("Path", "/"), -1)).withColumn(
-        "Directory",
-        F.when(
-            F.length(F.expr("substring(Path, 1, length(Path) - length(File) - 1)")) > 0,
-            F.expr("substring(Path, 1, length(Path) - length(File) - 1)"),
-        ).otherwise("."),
-    )
+    out = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parsed)
+    out = out.withColumn("File", F.element_at(F.split("Path", "/"), -1))
+    directory = F.expr("substring(Path, 1, length(Path) - length(File) - 1)")
+    out = out.withColumn("Directory", F.when(directory != "", directory).otherwise("."))
     return attach_sidecar_meta(spark, out, files)
 
 
@@ -489,12 +378,8 @@ def scan_sqlite(spark: SparkSession, files: list[str], table: str | None) -> Dat
 
 def _with_lineage(df: DataFrame) -> DataFrame:
     """Attach Path/File/Directory (S6) from the `_metadata.file_path`
-    hidden column. CRITICAL scale detail: `input_file_name()` is
-    non-deterministic, and Catalyst refuses to push predicates past a
-    Project containing a non-deterministic expression — lineage via
-    input_file_name silently disabled filter pushdown for every
-    downstream recipe filter. `_metadata` is a real scan attribute
-    (deterministic), so PushedFilters still reach the file source
+    hidden column: a real (deterministic) scan attribute, so Catalyst
+    still pushes downstream recipe filters into the file source
     (asserted in tests/test_plans.py)."""
     return (
         df.withColumn(

@@ -506,12 +506,29 @@ def test_tuple_merge_back_requires_allow_python(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# Record-boundary splitter for large single files (SCALING.md §Scans)
+# Byte-range line reader (SCALING.md §Scans)
 # ---------------------------------------------------------------------------
 
 
-def test_chunked_lines_match_wholetext(spark, tmp_path):
-    from bearysta_spark.engine.sources import chunked_lines_df, filtered_lines_df
+def python_lines(path, filters):
+    """Reference: the sequential filter over the whole file's '\\n'-split
+    lines, trailing '\\r's stripped."""
+    from bearysta_spark.engine.sources import _line_filter_fn_indexed
+
+    lines = path.read_bytes().decode().split("\n")
+    if lines[-1] == "":
+        lines.pop()
+    lines = [ln.rstrip("\r") for ln in lines]
+    return [ln for _, ln in _line_filter_fn_indexed(filters)(lines)] if filters else lines
+
+
+def ordered_lines(df):
+    rows = sorted(df.collect(), key=lambda r: (r["path"], r["chunk_id"], r["local_idx"]))
+    return [r["line"] for r in rows]
+
+
+def test_lines_df_matches_python_filter(spark, tmp_path):
+    from bearysta_spark.engine.sources import lines_df
 
     # one "large" file with wrapped (append) lines and droppable noise,
     # tiny chunks so many records straddle chunk boundaries
@@ -531,29 +548,17 @@ def test_chunked_lines_match_wholetext(spark, tmp_path):
         # re-match the glued line so appends are emitted
         r"^row .* tail \d+$": None,
     }
-    whole = filtered_lines_df(spark, [str(big)], filters).collect()
-    chunked = chunked_lines_df(
-        spark, [str(big)], filters, chunk_mb=2048 / (1024 * 1024), overlap_lines=4
-    ).collect()
-    wl = [(r["line_no"], r["line"]) for r in sorted(whole, key=lambda r: r["line_no"])]
-    cl = [(r["line_no"], r["line"]) for r in sorted(chunked, key=lambda r: r["line_no"])]
-    assert len(wl) > 100
-    assert cl == wl
+    want = python_lines(big, filters)
+    assert len(want) > 100
+    assert ordered_lines(lines_df(spark, [str(big)], filters)) == want
+    for chunk_bytes in (512, 2048, 5000):
+        got = lines_df(spark, [str(big)], filters, chunk_mb=chunk_bytes / (1024 * 1024))
+        assert ordered_lines(got) == want, chunk_bytes
 
     # no filters: plain line split must round-trip too
-    whole2 = filtered_lines_df(spark, [str(big)], None).collect()
-    chunked2 = chunked_lines_df(
-        spark, [str(big)], None, chunk_mb=1024 / (1024 * 1024)
-    ).collect()
-    assert sorted((r["line_no"], r["line"]) for r in chunked2) == sorted(
-        (r["line_no"], r["line"]) for r in whole2
-    )
-
-    # threshold routing: small files keep the wholetext path, big ones split
-    routed = filtered_lines_df(
-        spark, [str(big)], filters, split_files_over_mb=1024 / (1024 * 1024)
-    ).collect()
-    assert sorted((r["line_no"], r["line"]) for r in routed) == sorted(wl)
+    want2 = python_lines(big, None)
+    for chunk_mb in (None, 1024 / (1024 * 1024)):
+        assert ordered_lines(lines_df(spark, [str(big)], None, chunk_mb=chunk_mb)) == want2
 
 
 def test_recipe_split_large_files_equals_wholetext(spark, tmp_path):
@@ -576,6 +581,73 @@ def test_recipe_split_large_files_equals_wholetext(spark, tmp_path):
     chunked = {(r["Vendor"], r["Size"], r["MOPS"]) for r in RecipeEngine(spark, split).aggregated().collect()}
     assert chunked == plain
     assert len(plain) == 7
+
+
+ODD_NAMES = ["plain.csv", "a b.csv", "c#d.csv", "p%20q.csv", "r[1].csv", "e{f}.csv"]
+
+
+@pytest.mark.parametrize("split_mb", [None, 8 / (1024 * 1024)], ids=["whole", "split"])
+def test_scan_csv_reads_literal_paths(spark, tmp_path, split_mb):
+    # names a Hadoop path would percent-encode or re-glob read as themselves
+    from bearysta_spark.engine.sources import scan_csv
+
+    d = tmp_path / "odd dir"
+    files = []
+    for i, name in enumerate(ODD_NAMES):
+        files.append(write(d / name, f"x,name\n{i},{name}\n"))
+        write(d / (name + ".meta"), f"tag: t{i}\n")
+    out = scan_csv(spark, files, split_files_over_mb=split_mb).collect()
+    got = sorted((r["Path"], r["File"], r["Directory"], r["x"], r["name"], r["tag"]) for r in out)
+    assert got == sorted(
+        (str(d / n), n, str(d), str(i), n, f"t{i}") for i, n in enumerate(ODD_NAMES)
+    )
+
+
+@pytest.mark.parametrize("value", ["abc", [1], 0, -1, 1e-9, float("nan"), float("inf"), True])
+def test_split_files_over_mb_rejects_bad_values(value):
+    recipe = Recipe({"input": {"split-files-over-mb": value}})
+    with pytest.raises(RecipeError, match="split-files-over-mb"):
+        recipe.split_files_over_mb
+
+
+def test_split_files_over_mb_accepts_one_byte_and_up(spark, tmp_path):
+    one_byte = 1 / (1024 * 1024)
+    assert Recipe({"input": {"split-files-over-mb": one_byte}}).split_files_over_mb == one_byte
+    assert Recipe({"input": {"split-files-over-mb": 2}}).split_files_over_mb == 2.0
+    assert Recipe({"input": {}}).split_files_over_mb is None
+    # a sub-byte value fails as a recipe error before the scan divides by it
+    csv = write(tmp_path / "a.csv", "x\n1\n")
+    recipe = {
+        "input": {"path": csv, "format": "csv", "split-files-over-mb": 1e-9},
+        "aggregation": "mean",
+        "values": ["x"],
+    }
+    with pytest.raises(RecipeError, match="split-files-over-mb"):
+        RecipeEngine(spark, recipe).raw()
+
+
+@pytest.mark.parametrize("csv_header", [None, "A,B", "A, B"])
+def test_header_in_a_later_chunk_and_edge_files(spark, tmp_path, csv_header):
+    from bearysta_spark.engine.sources import lines_df, scan_csv
+
+    noise = "@noise padding line\n" * 3  # 60 bytes: chunks 0-2 hold only noise
+    files = [
+        write(tmp_path / "late.csv", noise + "A,B\n1,2\n3,4\n"),
+        write(tmp_path / "crlf.csv", "A,B\r\n5,6\r\n7,8\r\n"),
+        write(tmp_path / "nonl.csv", "A,B\n9,10"),
+        write(tmp_path / "empty.csv", ""),
+        write(tmp_path / "noise.csv", noise),
+    ]
+    filters = {"^@": "drop", "^[^@]": None}
+    split_mb = 16 / (1024 * 1024)
+    heads = lines_df(spark, files[:1], filters, chunk_mb=split_mb).filter("local_idx = 0")
+    assert min(r["chunk_id"] for r in heads.collect()) > 0
+
+    want = {("late.csv", "1", "2"), ("late.csv", "3", "4"), ("crlf.csv", "5", "6"),
+            ("crlf.csv", "7", "8"), ("nonl.csv", "9", "10")}
+    for mb in (None, split_mb):
+        out = scan_csv(spark, files, csv_header, filters, split_files_over_mb=mb)
+        assert {(r["File"], r["A"], r["B"]) for r in out.collect()} == want, mb
 
 
 # ---------------------------------------------------------------------------

@@ -14,11 +14,7 @@ import pathlib
 import pytest
 from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
 
-from bearysta_spark.engine.sources import (
-    attach_sidecar_meta,
-    chunked_lines_df,
-    scan_csv,
-)
+from bearysta_spark.engine.sources import attach_sidecar_meta, lines_df, scan_csv
 from bearysta_spark.operators import expected_fill
 from bearysta_spark.session import local_frame
 
@@ -77,7 +73,7 @@ def test_sidecar_frame_is_local_and_broadcast_joined(spark, tmp_path):
 def test_chunk_spec_frame_is_local(spark, tmp_path):
     big = tmp_path / "big.log"
     big.write_text("".join(f"line {i}\n" for i in range(200)))
-    out = chunked_lines_df(spark, [str(big)], None, chunk_mb=0.0005)
+    out = lines_df(spark, [str(big)], None, chunk_mb=0.0005)
     assert_jvm_local(out)
     assert out.count() == 200
 
@@ -122,5 +118,8 @@ def test_no_bare_create_dataframe_on_the_recipe_path():
         for path in sorted((PACKAGE / sub).rglob("*.py"))
         for i, line in enumerate(path.read_text().splitlines(), 1)
         if "createDataFrame(" in line
+        # the recipe CSV scan opens literal paths itself: a Hadoop text
+        # read percent-encodes or re-globs odd file names
+        or (sub == "engine" and ("spark.read.text(" in line or "input_file_name(" in line))
     ]
     assert not offenders, offenders

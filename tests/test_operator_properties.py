@@ -124,24 +124,20 @@ def test_winnowing_guarantee(spark, shared, pre_a, pre_b):
     line_len=st.integers(min_value=1, max_value=40),
     chunk_bytes=st.integers(min_value=16, max_value=600),
 )
-def test_chunked_reader_equals_wholetext(spark, tmp_path_factory, n_lines, line_len, chunk_bytes):
-    # record-boundary splitter: any chunk size yields the wholetext result
-    from bearysta_spark.engine.sources import chunked_lines_df, filtered_lines_df
+def test_lines_df_equals_python_split(spark, tmp_path_factory, n_lines, line_len, chunk_bytes):
+    # byte-range reader: any chunk size yields the file's newline-split lines
+    # in (chunk_id, local_idx) order
+    from bearysta_spark.engine.sources import lines_df
 
     p = tmp_path_factory.mktemp("chunkprop") / "f.log"
     lines = [("L%04d_" % i) + "x" * line_len for i in range(n_lines)]
     p.write_text("\n".join(lines) + "\n")
-    whole = sorted(
-        (r["line_no"], r["line"])
-        for r in filtered_lines_df(spark, [str(p)], None).collect()
-    )
-    chunked = sorted(
-        (r["line_no"], r["line"])
-        for r in chunked_lines_df(
-            spark, [str(p)], None, chunk_mb=chunk_bytes / (1024 * 1024)
-        ).collect()
-    )
-    assert chunked == whole
+    for chunk_mb in (None, chunk_bytes / (1024 * 1024)):
+        rows = sorted(
+            lines_df(spark, [str(p)], None, chunk_mb=chunk_mb).collect(),
+            key=lambda r: (r["chunk_id"], r["local_idx"]),
+        )
+        assert [r["line"] for r in rows] == lines
 
 
 @settings(max_examples=10, deadline=None,

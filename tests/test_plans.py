@@ -164,20 +164,18 @@ def test_repeated_spans_digest_agg_no_cross_join(spark):
     assert "partial" in p.lower()  # md5-digest count map-side combines
 
 
-def test_chunked_lines_offsets_broadcast(spark, tmp_path):
-    from bearysta_spark.engine.sources import chunked_lines_df
+def test_lines_df_plan_is_one_map_over_local_specs(spark, tmp_path):
+    from bearysta_spark.engine.sources import lines_df
 
     big = tmp_path / "big.log"
     big.write_text("\n".join(f"DATA: {i}" for i in range(5000)) + "\n")
-    df = chunked_lines_df(spark, [str(big)], {r"^DATA: (.*)": r"\1"}, chunk_mb=0.005)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    p = buf.getvalue()
-    # global line numbering joins the tiny per-chunk offset frame via
-    # broadcast — the file's rows must never hit a window/sort exchange
-    assert "BroadcastHashJoin" in p
-    assert "CartesianProduct" not in p
+    df = lines_df(spark, [str(big)], {r"^DATA: (.*)": r"\1"}, chunk_mb=0.005)
+    p = df._jdf.queryExecution().executedPlan().toString()
+    # chunk specs are a LocalRelation feeding one mapInPandas: no
+    # shuffle, no window, no join
+    assert p.count("MapInPandas") == 1, p
+    for node in ("Exchange", "Window", "Join", "CartesianProduct"):
+        assert node not in p, p
 
 
 def test_bloom_decontam_probe_is_jvm_side(spark):
