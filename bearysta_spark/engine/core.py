@@ -9,9 +9,11 @@ get_aggregated_data (aggregate.py:588-729):
     .agg(values: recipe agg, others: first) → drop '_'-prefixed columns
 
 Everything stays lazy until an action; the numeric-inference passes are
-the exception (each needs one small aggregate job over candidate string
+the exception (each needs one aggregate job over candidate string
 columns — the price of reproducing pandas' dynamic `to_numeric`
-inference with static Catalyst types).
+inference with static Catalyst types). The pass after the reshaping
+stages probes only the columns they rewrote, and runs no job when none
+of those is a string; the filter-in pass probes every string column.
 
 Recursion (S10): `input.config` children are built depth-first and
 contribute their *normalized* (pre-aggregation) frames with `File`
@@ -23,6 +25,7 @@ from __future__ import annotations
 
 import logging
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,6 +53,7 @@ logger = logging.getLogger("bearysta_spark.engine")
 # ~30 s per pass on 600k rows × 5 non-numeric columns vs <1 s for rlike)
 _NUM_RE = r"^[+-]?((\d+\.?\d*|\.\d+)([eE][+-]?\d+)?|[iI][nN][fF]([iI][nN][iI][tT][yY])?|[nN][aA][nN])$"
 _INT_RE = r"^[+-]?\d+$"
+_NUM_PY = re.compile(_NUM_RE, re.ASCII)
 
 # lineage columns are strings by construction — never probe them
 _LINEAGE = ("Path", "File", "Directory")
@@ -60,34 +64,16 @@ def infer_numeric(df: DataFrame, exclude: tuple[str, ...] = ()) -> DataFrame:
     string column iff every non-null value parses as a number; long when
     all values are integral (and no NaN markers), else double.
 
-    Two stages to keep it cheap on wide frames: (1) one job fetches the
-    first non-null value of every candidate — columns whose sample
-    doesn't parse are left string immediately (the common case for
-    label/lineage columns); (2) one aggregate job over the survivors
-    counts regex mismatches. Promotion itself is a lazy projection.
+    One aggregate job counts the non-null values, regex mismatches and
+    integer mismatches of every candidate; promotion itself is a lazy
+    projection. `exclude` names columns whose verdict the caller already
+    knows (see RecipeEngine.normalized).
     """
     cand = [
         c
         for c, t in df.dtypes
         if t == "string" and c not in exclude and c not in _LINEAGE
     ]
-    if not cand:
-        return df
-
-    firsts = df.agg(
-        *[F.first(qcol(c), ignorenulls=True).alias(c) for c in cand]
-    ).collect()[0]
-
-    def plausible(v) -> bool:
-        if v is None:
-            return False
-        try:
-            float(v)
-            return True
-        except (TypeError, ValueError):
-            return False
-
-    cand = [c for c in cand if plausible(firsts[c])]
     if not cand:
         return df
 
@@ -105,10 +91,8 @@ def infer_numeric(df: DataFrame, exclude: tuple[str, ...] = ()) -> DataFrame:
         n, bad, nonint = stats[f"n_{i}"], stats[f"bad_{i}"], stats[f"nonint_{i}"]
         if n == 0 or bad > 0:
             continue  # not all-numeric → keep string (pandas behavior)
-        if nonint == 0:
-            promotions[c] = F.expr(f"try_cast(trim(`{c}`) as bigint)")
-        else:
-            promotions[c] = F.expr(f"try_cast(trim(`{c}`) as double)")
+        to = "bigint" if nonint == 0 else "double"
+        promotions[c] = F.trim(qcol(c)).try_cast(to)
     return df.withColumns(promotions) if promotions else df
 
 
@@ -231,16 +215,34 @@ class RecipeEngine:
 
         df = infer_numeric(df)
 
+        # Every dtype is now settled. The stages below keep each column
+        # they do not rewrite with the same set of values (pack repeats
+        # rows, unpack groups them, ratio joins are left joins), so its
+        # verdict cannot change: the next pass probes only what they
+        # rewrite.
+        settled = set(df.columns)
+
         for col, expr in r.precomputed.items():
-            df = self._precompute(df, col, expr)
+            df, python = self._precompute(df, col, expr)
+            # a python lambda sees, and may rebuild, the whole frame
+            settled = set() if python else settled - {col}
 
         for p in r.pack:
-            df = pack(df, p["columns"], p["name"], p.get("value", "Value"))
+            name, value = p["name"], p.get("value", "Value")
+            df = pack(df, p["columns"], name, value)
+            settled -= {*p["columns"], name, value}
+            if not all(_NUM_PY.match(c.strip(" ")) for c in p["columns"]):
+                # every row carries every packed name, so one
+                # non-numeric name keeps the column a string (Spark's
+                # `trim` strips spaces only)
+                settled.add(name)
 
         for p in r.unpack:
+            carried = set(df.columns) - {p["name"], p["value"]}
             df = unpack(df, p["name"], p["value"])
+            settled &= carried
 
-        df = infer_numeric(df)
+        df = infer_numeric(df, exclude=tuple(settled))
 
         if r.filter_in:
             df = filter_in(df, r.filter_in)
@@ -270,10 +272,12 @@ class RecipeEngine:
 
     # -- precompute ---------------------------------------------------
 
-    def _precompute(self, df: DataFrame, col: str, expr) -> DataFrame:
+    def _precompute(self, df: DataFrame, col: str, expr) -> tuple[DataFrame, bool]:
+        """The frame with `col` computed, and whether the expression
+        fell back to python eval."""
         r = self.recipe
         if not isinstance(expr, str):
-            return df.withColumn(col, F.lit(expr))
+            return df.withColumn(col, F.lit(expr)), False
 
         rewritten, ratio_calls = extract_ratio_calls(expr)
         tmp_cols = []
@@ -296,6 +300,7 @@ class RecipeEngine:
             )
             tmp_cols.append(tmp)
 
+        python = False
         try:
             column = compile_expr(df, rewritten)
             df = df.withColumn(col, column)
@@ -303,7 +308,8 @@ class RecipeEngine:
             if not self.allow_python:
                 raise
             df = self._python_fallback(df, col, expr)
-        return df.drop(*tmp_cols) if tmp_cols else df
+            python = True
+        return (df.drop(*tmp_cols) if tmp_cols else df), python
 
     def _python_fallback(self, df: DataFrame, col: str, expr: str) -> DataFrame:
         """Arrow-batched pandas eval of the original lambda string —

@@ -29,12 +29,24 @@ def pack(
     value_type: str = "double",
 ) -> DataFrame:
     """Melt `columns` into (name, value) long rows; all other columns are
-    id_vars. Values are cast to a common type (melt requires it; recipe
-    values are numeric measures)."""
+    id_vars. Values are cast to a common type (melt requires it): to
+    `value_type` when every packed column is numeric (recipe values are
+    numeric measures), else to string, numeric columns rendered from
+    `value_type`, so the caller's inference decides — as pandas' melt
+    keeps the strings, where a cast would fail on the first word."""
     ids = [c for c in df.columns if c not in columns]
+    types = dict(df.dtypes)
+    strings = any(types.get(c) == "string" for c in columns)
+
+    def packed(c):
+        if types.get(c) == "string":
+            return qcol(c)
+        v = qcol(c).cast(value_type)
+        return v.cast("string") if strings else v
+
     casted = df.select(
         *[qcol(c) for c in ids],
-        *[qcol(c).cast(value_type).alias(c) for c in columns],
+        *[packed(c).alias(c) for c in columns],
     )
     return casted.unpivot(
         [qcol(c) for c in ids], [qcol(c) for c in columns], name, value

@@ -7,16 +7,21 @@ our own content) and validated against hand-computed expectations.
 
 from __future__ import annotations
 
+import math
 import sqlite3
 import textwrap
 
 import pytest
 import yaml
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from bearysta_spark.engine import Recipe, RecipeEngine
 from bearysta_spark.engine.core import infer_numeric
 from bearysta_spark.engine.recipe import RecipeError
+from bearysta_spark.session import local_frame
 
 
 def write(p, content):
@@ -373,8 +378,8 @@ def test_non_numeric_values_error(spark, tmp_path):
 
 def test_infer_numeric(spark):
     df = spark.createDataFrame(
-        [("1", "1.5", "x", "7", "NaN"), ("2", "2", "3", "8", "2.5")],
-        ["ints", "floats", "mixed", "ints2", "with_nan"],
+        [("1", "1.5", "x", "7", "NaN", "1"), ("2", "2", "3", "8", "2.5", "4")],
+        ["ints", "floats", "mixed", "ints2", "with_nan", "odd`key"],
     )
     out = infer_numeric(df)
     t = dict(out.dtypes)
@@ -383,6 +388,9 @@ def test_infer_numeric(spark):
     assert t["mixed"] == "string"
     assert t["ints2"] == "bigint"
     assert t["with_nan"] == "double"  # 'NaN' parses as double NaN
+    # a backtick in the name (a sidecar key or CSV header can carry one)
+    assert t["odd`key"] == "bigint"
+    assert [r["odd`key"] for r in out.collect()] == [1, 4]
 
 
 def test_variants_pivot_tables(spark, tmp_path):
@@ -744,6 +752,197 @@ def test_filter_in_dropping_non_numeric_rows_promotes_the_column(spark, tmp_path
     eng = RecipeEngine(spark, recipe)
     assert dict(eng.normalized().dtypes)["x"] == "double"
     assert [(r["status"], r["x"]) for r in eng.aggregated().collect()] == [("ok", 3.0)]
+
+
+def test_infer_numeric_is_one_collect(spark, monkeypatch):
+    df = spark.createDataFrame([("1", "x", "2.5"), ("2", "y", None)], ["a", "b", "c"])
+    assert _collects_during(monkeypatch, spark, lambda: infer_numeric(df)) == 1
+    # nothing to probe: no job at all
+    assert _collects_during(monkeypatch, spark, lambda: infer_numeric(df, exclude=("a", "b", "c"))) == 0
+
+
+def test_pack_recipe_without_filter_in_probes_once(spark, tmp_path, monkeypatch):
+    csv = write(tmp_path / "p.csv", "Prefix,fit,predict\npy,10.0,1.0\nnat,20.0,2.0\n")
+    recipe = {
+        "input": {"path": csv, "format": "csv"},
+        "pack": [{"columns": ["fit", "predict"], "name": "Function", "value": "Time"}],
+        "aggregation": "min",
+        "series": ["Prefix"],
+        "axis": ["Function"],
+        "values": ["Time"],
+    }
+    eng = RecipeEngine(spark, recipe)
+    # the header sniff and inference pass 1: pack leaves no column to re-probe
+    assert _collects_during(monkeypatch, spark, eng.normalized) == 2
+    assert dict(eng.normalized().dtypes)["Function"] == "string"
+
+
+def test_pack_of_a_string_column_raises_recipe_error(spark, tmp_path):
+    csv = write(tmp_path / "s.csv", "k,s,x\nA,x,1\nB,y,2\n")
+    recipe = {
+        "input": {"path": csv, "format": "csv"},
+        "pack": [{"columns": ["s", "x"], "name": "N", "value": "V"}],
+        "aggregation": "sum",
+        "series": ["k"],
+        "axis": ["N"],
+        "values": ["V"],
+    }
+    with pytest.raises(RecipeError, match="non-numerical"):
+        RecipeEngine(spark, recipe).aggregated().collect()
+
+
+def test_pack_of_an_all_null_string_column_gives_a_double_value_column(spark, tmp_path):
+    csv = write(tmp_path / "n.csv", "k,s,x,y\nA,,1,5\nB,,2,6\n")
+    recipe = {
+        "input": {"path": csv, "format": "csv"},
+        "pack": [{"columns": ["s", "x"], "name": "N", "value": "V"}],
+        "aggregation": "sum",
+        "series": ["k"],
+        "axis": ["N", "V"],
+        "values": ["y"],
+    }
+    eng = RecipeEngine(spark, recipe)
+    # x's integers are packed as "1.0", "2.0": the value column stays
+    # double, as when every packed column was cast to double
+    assert dict(eng.normalized().dtypes)["V"] == "double"
+    rows = {(r["k"], r["N"]): (r["V"], r["y"]) for r in eng.aggregated().collect()}
+    assert rows == {
+        ("A", "s"): (None, 5.0),
+        ("A", "x"): (1.0, 5.0),
+        ("B", "s"): (None, 6.0),
+        ("B", "x"): (2.0, 6.0),
+    }
+
+
+# Recipes whose pass-2 verdicts depend on what a stage rewrote. The
+# expected dtypes and rows are those of the engine that re-probed every
+# string column after the reshaping stages.
+SETTLED_CASES = {
+    "numeric_pack_names": (
+        "k,1,2\nA,1.5,2.5\nB,3,4\n",
+        {"pack": [{"columns": ["1", "2"], "name": "N", "value": "V"}], "series": ["k"], "axis": ["N"], "values": ["V"]},
+        {"N": "bigint", "V": "double"},
+        [("A", 1, 1.5), ("A", 2, 2.5), ("B", 1, 3.0), ("B", 2, 4.0)],
+    ),
+    "mixed_pack_names": (
+        "k,1,x\nA,1.5,2.5\nB,3,4\n",
+        {"pack": [{"columns": ["1", "x"], "name": "N", "value": "V"}], "series": ["k"], "axis": ["N"], "values": ["V"]},
+        {"N": "string", "V": "double"},
+        [("A", "1", 1.5), ("A", "x", 2.5), ("B", "1", 3.0), ("B", "x", 4.0)],
+    ),
+    "unpack_creates_numeric_columns": (
+        "k,metric,v\na,min,1\na,cnt,3\na,note,n/a\nb,min,2.5\nb,cnt,4\nb,note,x\n",
+        {"unpack": [{"name": "metric", "value": "v"}], "series": ["k"], "axis": ["cnt", "note"], "values": ["min"]},
+        {"cnt": "bigint", "note": "string", "min": "double"},
+        [("a", 3, "n/a", 1.0), ("b", 4, "x", 2.5)],
+    ),
+    "precompute_overwrites_a_column": (
+        "k,x,y\nA,a1,1\nB,b2,2\n",
+        {"precomputed": {"x": "'{}'.format(int(row['y']) * 10)"}, "series": ["k"], "axis": ["x"], "values": ["y"]},
+        {"x": "bigint", "y": "double"},
+        [("A", 10, 1.0), ("B", 20, 2.0)],
+    ),
+    "python_precompute_rebuilds_rows": (
+        # the merge-back keeps vendor a's rows only, so `note` is left
+        # all-numeric although pass 1 saw "n/a"
+        "Vendor,note,MOPS\na,1,100.0\na,2,50.0\nb,n/a,10.0\n",
+        {
+            "precomputed": {
+                "VM": "(df[df['Vendor'] == 'a'].groupby('Vendor', as_index=False).agg({'MOPS': 'mean'}), 'MOPS')"
+            },
+            "series": ["Vendor"],
+            "axis": ["note"],
+            "values": ["MOPS", "VM"],
+        },
+        {"note": "bigint", "MOPS": "double", "VM": "double"},
+        [("a", 1, 100.0, 75.0), ("a", 2, 50.0, 75.0)],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(SETTLED_CASES))
+def test_settled_columns_keep_the_reprobed_verdicts(spark, tmp_path, case):
+    text, spec, dtypes, rows = SETTLED_CASES[case]
+    recipe = {"input": {"path": write(tmp_path / "in.csv", text), "format": "csv"}, "aggregation": "sum", **spec}
+    eng = RecipeEngine(spark, recipe, allow_python=True)
+    t = dict(eng.normalized().dtypes)
+    assert {c: t[c] for c in dtypes} == dtypes
+    dims = spec["series"] + spec["axis"] + spec["values"]
+    assert sorted(tuple(r[c] for c in dims) for r in eng.aggregated().collect()) == rows
+
+
+def _inferred(values: list[str | None]) -> tuple[str, list]:
+    """The inference rule in pure Python: spaces stripped, a column of
+    strings that all parse as numbers becomes bigint when every one is
+    an integer, else double; an all-null or empty column stays string.
+    Two casting edges are Spark's: an integer outside the bigint range
+    becomes null, and so does a signed NaN not spelled `NaN`."""
+    present = [v.strip(" ") for v in values if v is not None]
+
+    def parses(f, v):
+        try:
+            f(v)
+            return True
+        except ValueError:
+            return False
+
+    if not present or not all(parses(float, v) for v in present):
+        return "string", values
+    if all(parses(int, v) for v in present):
+
+        def to_long(v):
+            n = int(v.strip(" "))
+            return n if -(2**63) <= n < 2**63 else None
+
+        return "bigint", [None if v is None else to_long(v) for v in values]
+
+    def to_double(v):
+        v = v.strip(" ")
+        if v[0] in "+-" and v[1:].lower() == "nan" and v[1:] != "NaN":
+            return None
+        return float(v)
+
+    return "double", [None if v is None else to_double(v) for v in values]
+
+
+_SPECIAL = st.sampled_from(
+    ["inf", "Inf", "+inf", "-Infinity", "INFINITY", "infinit", "nan", "NaN", "-nan", "+NaN", "1e400", "99999999999999999999", "x", "n/a"]
+)
+_CELL = st.one_of(
+    st.none(),
+    st.builds(
+        lambda left, body, right: " " * left + body + " " * right,
+        st.integers(0, 2),
+        st.one_of(st.text(alphabet="0123456789+-.eE", max_size=6), _SPECIAL),
+        st.integers(0, 2),
+    ),
+)
+
+
+def _same(a, b) -> bool:
+    if isinstance(a, float) and isinstance(b, float) and math.isnan(a):
+        return math.isnan(b)
+    return a == b and type(a) is type(b)
+
+
+@settings(max_examples=25, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(
+    st.integers(1, 4).flatmap(
+        lambda ncols: st.lists(st.lists(_CELL, min_size=ncols, max_size=ncols), max_size=6).map(
+            lambda rows: (ncols, rows)
+        )
+    )
+)
+def test_infer_numeric_matches_the_python_rule(spark, shape):
+    ncols, rows = shape
+    names = [f"c{i}" for i in range(ncols)]
+    schema = StructType([StructField(c, StringType()) for c in names])
+    out = infer_numeric(local_frame(spark, rows, schema))
+    got = out.collect()
+    for i, c in enumerate(names):
+        dtype, values = _inferred([r[i] for r in rows])
+        assert dict(out.dtypes)[c] == dtype, (c, rows)
+        assert all(_same(g[c], v) for g, v in zip(got, values)), (c, rows, got)
 
 
 def test_engine_caches_are_released_by_scope_end(spark, tmp_path):
