@@ -43,15 +43,21 @@ def main(argv: list[str] | None = None) -> int:
                 out = sinks.to_csv(agg, args.csv)
                 if out:
                     sys.stdout.write(out)
+            # each pivot_tables call collects the aggregated table
+            tables = (
+                eng.pivot_tables(agg)
+                if args.pretty_print or args.html or args.excel
+                else []
+            )
             if args.pretty_print:
-                for variant, table in eng.pivot_tables(agg):
+                for variant, table in tables:
                     title = ", ".join(map(str, variant)) if variant else ""
                     sys.stdout.write(sinks.pivot_string(
                         table, eng.recipe.number_format,
                         bool(eng.recipe["number-format-max-only"]), title))
             if args.html:
                 sinks.to_html(
-                    list(eng.pivot_tables(agg)),
+                    tables,
                     path=args.html,
                     indicator=eng.recipe["indicator"],
                     plot=args.plot,
@@ -61,7 +67,7 @@ def main(argv: list[str] | None = None) -> int:
                 # aggregated frame goes on `data` unconditionally; --raw adds
                 # the normalized pre-aggregation frame on a separate `raw`
                 sinks.to_excel(
-                    list(eng.pivot_tables(agg)),
+                    tables,
                     path=args.excel,
                     data_df=agg,
                     raw_df=eng.normalized() if args.raw else None,

@@ -24,11 +24,14 @@ cached — a child referenced by several parents computes once.
 from __future__ import annotations
 
 import logging
+import math
 import os
 import re
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from bearysta_spark.cachescope import scoped_cache
 from bearysta_spark.colnames import qcol
@@ -53,6 +56,7 @@ logger = logging.getLogger("bearysta_spark.engine")
 # ~30 s per pass on 600k rows × 5 non-numeric columns vs <1 s for rlike)
 _NUM_RE = r"^[+-]?((\d+\.?\d*|\.\d+)([eE][+-]?\d+)?|[iI][nN][fF]([iI][nN][iI][tT][yY])?|[nN][aA][nN])$"
 _INT_RE = r"^[+-]?\d+$"
+_SIGNED_NAN_RE = r"^[+-][nN][aA][nN]$"
 _NUM_PY = re.compile(_NUM_RE, re.ASCII)
 
 # lineage columns are strings by construction — never probe them
@@ -62,12 +66,14 @@ _LINEAGE = ("Path", "File", "Directory")
 def infer_numeric(df: DataFrame, exclude: tuple[str, ...] = ()) -> DataFrame:
     """P2: pandas `to_numeric(errors='ignore')` semantics — promote a
     string column iff every non-null value parses as a number; long when
-    all values are integral (and no NaN markers), else double.
+    all values are integral and fit a long (and no NaN markers), else
+    double. A signed NaN (`-nan`, `+nan`) is NaN, as in pandas; Spark's
+    cast reads only an unsigned one.
 
-    One aggregate job counts the non-null values, regex mismatches and
-    integer mismatches of every candidate; promotion itself is a lazy
-    projection. `exclude` names columns whose verdict the caller already
-    knows (see RecipeEngine.normalized).
+    One aggregate job counts the non-null values, regex mismatches,
+    integer mismatches and out-of-range integers of every candidate;
+    promotion itself is a lazy projection. `exclude` names columns whose
+    verdict the caller already knows (see RecipeEngine.normalized).
     """
     cand = [
         c
@@ -84,16 +90,34 @@ def infer_numeric(df: DataFrame, exclude: tuple[str, ...] = ()) -> DataFrame:
             F.count(qcol(c)).alias(f"n_{i}"),
             F.count(F.when(~t.rlike(_NUM_RE), 1)).alias(f"bad_{i}"),
             F.count(F.when(~t.rlike(_INT_RE), 1)).alias(f"nonint_{i}"),
+            # an integer a long cannot hold makes the column double
+            F.count(F.when(t.rlike(_INT_RE) & t.try_cast("bigint").isNull(), 1)).alias(
+                f"big_{i}"
+            ),
         ]
     stats = df.agg(*aggs).collect()[0]
     promotions = {}
     for i, c in enumerate(cand):
-        n, bad, nonint = stats[f"n_{i}"], stats[f"bad_{i}"], stats[f"nonint_{i}"]
+        n, bad = stats[f"n_{i}"], stats[f"bad_{i}"]
         if n == 0 or bad > 0:
             continue  # not all-numeric → keep string (pandas behavior)
-        to = "bigint" if nonint == 0 else "double"
-        promotions[c] = F.trim(qcol(c)).try_cast(to)
+        t = F.trim(qcol(c))
+        if stats[f"nonint_{i}"] == 0 and stats[f"big_{i}"] == 0:
+            promotions[c] = t.try_cast("bigint")
+        else:
+            promotions[c] = F.regexp_replace(t, _SIGNED_NAN_RE, "NaN").try_cast("double")
     return df.withColumns(promotions) if promotions else df
+
+
+_NAN = float("nan")
+
+
+def _distinct_value(v):
+    """`v` as Spark's `distinct` groups it: every NaN is one value (one
+    object, so tuples holding it compare equal) and -0.0 is 0.0."""
+    if isinstance(v, float):
+        return _NAN if math.isnan(v) else v + 0.0
+    return v
 
 
 def _align_for_union(frames: list[DataFrame]) -> list[DataFrame]:
@@ -483,27 +507,61 @@ class RecipeEngine:
 
     # -- pivot --------------------------------------------------------
 
-    def pivot_tables(self, df: DataFrame | None = None):
+    def pivot_tables(self, df: DataFrame | None = None) -> list[tuple[tuple, DataFrame]]:
         """A6: one wide pivot per variant combination (axis rows ×
         series columns), mirroring the reference's per-variant
-        pivot_table loop (aggregate.py:749-789)."""
-        from bearysta_spark.operators.aggregate import pivot_table
+        pivot_table loop (aggregate.py:749-789).
+
+        The aggregated table holds one row per dims combination, so it
+        is collected once: its axis, variant and value columns plus the
+        pivot key Spark computes (`pivot_key`). The combinations (sorted
+        by their str), each one's rows and each one's key list (sorted
+        as Spark's `pivot()` sorts, ascending with null first) come from
+        that collect. Each table re-applies the aggregation to its rows
+        in a one-partition JVM-local frame: one 1-task job when it is
+        collected. A null variant value forms a combination, and NaNs
+        form one, as in Spark's `distinct`. A table with more keys than
+        `spark.sql.pivotMaxValues` is left to Spark's `pivot()`, which
+        raises.
+        """
+        from bearysta_spark.operators.aggregate import pivot_key, pivot_table
 
         r = self.recipe
         if df is None:
             df = self.aggregated()
         variants = [v for v in r.variants if v in df.columns]
-        if not variants:
-            yield (), pivot_table(df, r.axis, r.series or ["File"], r.values, self._pivot_agg())
-            return
-        combos = [tuple(row) for row in df.select(*variants).distinct().collect()]
+        cols = list(dict.fromkeys([*r.axis, *r.values]))
+        key = "__pivot_key"
+        view = df.select(
+            *[qcol(c) for c in dict.fromkeys([*cols, *variants])],
+            pivot_key(r.series or ["File"]).alias(key),
+        )
+        table = view.toArrow()
+        keys = table.column(key).to_pylist()
+        found = [table.column(v).to_pylist() for v in variants]
+        # with no variants, one table over every row, even when empty
+        combos: dict[tuple, list[int]] = {} if variants else {(): []}
+        for i in range(table.num_rows):
+            combo = tuple(_distinct_value(f[i]) for f in found)
+            combos.setdefault(combo, []).append(i)
+
+        table = table.select([*cols, key])
+        schema = StructType([view.schema[c] for c in [*cols, key]])
+        max_keys = int(self.spark.conf.get("spark.sql.pivotMaxValues"))
+        out = []
         for combo in sorted(combos, key=lambda t: tuple(str(x) for x in t)):
-            sub = df
-            for c, val in zip(variants, combo):
-                sub = sub.filter(qcol(c) == F.lit(val))
-            yield combo, pivot_table(
-                sub, r.axis, r.series or ["File"], r.values, self._pivot_agg()
-            )
+            rows = combos[combo]
+            names = sorted({keys[i] for i in rows}, key=lambda k: (k is not None, k or ""))
+            frame = local_frame(self.spark, table.take(pa.array(rows, pa.int64())), schema)
+            out.append((combo, pivot_table(
+                frame.coalesce(1),
+                r.axis,
+                [key],
+                r.values,
+                self._pivot_agg(),
+                column_values=names if len(names) <= max_keys else None,
+            )))
+        return out
 
     def _pivot_agg(self) -> str:
         return self.recipe.aggregation if self.recipe.aggregation in AGG_FUNCS else "mean"

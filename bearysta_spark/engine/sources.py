@@ -18,10 +18,10 @@ Spark-first shape of the reference's per-file reader (aggregate.py:134-314):
    header sniffing per file (S4: injected header used only when the
    file's first surviving line differs from it).
 4. Lineage columns Path/File/Directory (S6) come from those same paths;
-   `.meta` sidecar constants (S7) are driver-loaded (tiny YAML) into a
-   JVM-local frame (`session.local_frame`, a LocalRelation, so no
-   action replays it through Python workers) and broadcast-joined on
-   Path.
+   `.meta` sidecar constants (S7) are driver-loaded (tiny YAML) onto
+   each file's rows of the chunk-spec frame, and the reader copies
+   them onto every line it yields. No join, so no action pays a
+   broadcast job for them.
 5. SQLite (S8) reads driver-side via the stdlib sqlite3 module — a
    sqlite file is single-machine by construction; at scale this input
    becomes JDBC/parquet.
@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
 from bearysta_spark.cachescope import scoped_cache
+from bearysta_spark.colnames import qcol
 from bearysta_spark.engine.recipe import Recipe, RecipeError
 from bearysta_spark.session import local_frame
 
@@ -51,6 +52,14 @@ _CHUNK_SPEC = StructType(
         StructField("chunk_id", IntegerType()),
         StructField("off", LongType()),
         StructField("length", LongType()),
+    ]
+)
+_LINES = StructType(
+    [
+        StructField("path", StringType()),
+        StructField("chunk_id", IntegerType()),
+        StructField("local_idx", LongType()),
+        StructField("line", StringType()),
     ]
 )
 
@@ -152,9 +161,10 @@ def lines_df(
     files: list[str],
     filters: dict[str, str | None] | None,
     chunk_mb: float | None = None,
+    constants: dict[str, list[str | None]] | None = None,
 ) -> DataFrame:
-    """(path, chunk_id, local_idx, line) after the line filter; a file's
-    lines are in (chunk_id, local_idx) order.
+    """(path, chunk_id, local_idx, line, *constants) after the line
+    filter; a file's lines are in (chunk_id, local_idx) order.
 
     The driver plans byte-range chunk specs from file sizes: one chunk
     per file, or ~chunk_mb ranges when set, so one multi-GB log does not
@@ -162,36 +172,62 @@ def lines_df(
     (_read_chunk) and replay `overlap_lines` (8) of context before each
     chunk so prev-line state (`append` gluing) is reconstructed: a chain
     of consecutive `append` lines longer than that would be mis-glued
-    (shipped recipes wrap at most one line)."""
+    (shipped recipes wrap at most one line).
+
+    `constants` maps extra string column names (other than the four
+    above) to one value per file, aligned with `files`. A file's values
+    ride its chunk specs and are repeated on every line it yields."""
+    constants = constants or {}
     chunk = int(chunk_mb * 1024 * 1024) if chunk_mb is not None else None
     specs = []
-    for fn in files:
+    for j, fn in enumerate(files):
+        values = tuple(v[j] for v in constants.values())
         size = os.path.getsize(fn)
         step = chunk or max(size, 1)
         for i in range(max(1, -(-size // step))):
-            specs.append((fn, i, i * step, min(step, size - i * step)))
+            specs.append((fn, i, i * step, min(step, size - i * step), *values))
+    extra = [StructField(n, StringType()) for n in constants]
     indexed = _line_filter_fn_indexed(filters or {})
 
     def proc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for path, cid, off, length in zip(
-                pdf["path"], pdf["chunk_id"], pdf["off"], pdf["length"]
-            ):
+            for path, cid, off, length, *values in pdf.itertuples(index=False, name=None):
                 ctx, owned = _read_chunk(path, int(off), int(length))
                 outs = (
                     [line for idx, line in indexed(ctx + owned) if idx >= len(ctx)]
                     if filters
                     else owned
                 )
-                rows.extend((path, int(cid), i, line) for i, line in enumerate(outs))
-            yield pd.DataFrame(
-                rows, columns=["path", "chunk_id", "local_idx", "line"]
-            )
+                rows.extend(
+                    (path, int(cid), i, line, *values) for i, line in enumerate(outs)
+                )
+            yield pd.DataFrame(rows, columns=_LINES.fieldNames() + list(constants))
 
-    return local_frame(spark, specs, _CHUNK_SPEC).mapInPandas(
-        proc, schema="path string, chunk_id int, local_idx long, line string"
-    )
+    spec = local_frame(spark, specs, StructType(_CHUNK_SPEC.fields + extra))
+    return spec.mapInPandas(proc, schema=StructType(_LINES.fields + extra))
+
+
+def load_sidecars(files: list[str]) -> tuple[list[str], dict[str, list[str | None]]]:
+    """S7: the `.meta` YAML sidecars of `files` (reference
+    aggregate.py:263-270) as (keys in first-seen order, key -> one
+    value per file). A value is `str(v)`; a file with no sidecar, an
+    unreadable one, or one without the key gets None."""
+    import yaml as _yaml
+
+    metas: list[dict] = []
+    keys: list[str] = []
+    for f in files:
+        m: dict = {}
+        if os.path.isfile(f + ".meta"):
+            try:
+                with open(f + ".meta") as fd:
+                    m = _yaml.safe_load(fd) or {}
+            except (OSError, ValueError, _yaml.YAMLError):
+                pass  # unreadable or undecodable: as if absent
+        metas.append(m)
+        keys += [k for k in m if k not in keys]
+    return keys, {k: [None if k not in m else str(m[k]) for m in metas] for k in keys}
 
 
 def scan_csv(
@@ -204,17 +240,28 @@ def scan_csv(
     """Distributed CSV scan with line preprocessing, header sniff,
     lineage columns and sidecar metadata. All columns load as strings;
     numeric promotion is the engine's inference pass (P2)."""
-    # one spelling for the reader's paths, Path, the sidecar key and the
-    # header lookup
+    # one spelling for the reader's paths, Path, the sidecar lookup and
+    # the header lookup
     files = [os.path.abspath(f) for f in files]
-    lines = lines_df(spark, files, line_filter, chunk_mb=split_files_over_mb)
+    keys, values = load_sidecars(files)
+    # the reader carries sidecar values under positional names, so a key
+    # named like one of its own columns (`line`, `path`) cannot clash
+    carried = [f"meta{i}" for i in range(len(keys))]
+    lines = lines_df(
+        spark,
+        files,
+        line_filter,
+        chunk_mb=split_files_over_mb,
+        constants=dict(zip(carried, values.values())),
+    )
     if line_filter:
         lines = scoped_cache(lines)
 
     # header decision per file: first surviving line, i.e. line 0 of the
     # file's lowest chunk with any output
     firsts: dict[str, tuple[int, str]] = {}
-    for r in lines.filter(F.col("local_idx") == 0).collect():
+    heads = lines.filter(F.col("local_idx") == 0).select("path", "chunk_id", "line")
+    for r in heads.collect():
         first = (r["chunk_id"], r["line"])
         firsts[r["path"]] = min(firsts.get(r["path"], first), first)
 
@@ -241,6 +288,17 @@ def scan_csv(
         if has_hdr:
             g["header_at"].setdefault(cid, []).append(path)
 
+    if not groups:
+        return local_frame(spark, [], StructType([StructField("Path", StringType())]))
+
+    # past the CSV parse the sidecar values share the frame with the data
+    # columns: rename them to a prefix no column name starts with
+    taken = {c for cols in groups for c in cols} | {"Path", "File", "Directory"}
+    tag = "_sidecar"
+    while any(c.startswith(tag) for c in taken):
+        tag = "_" + tag
+    internal = [f"{tag}{i}" for i in range(len(keys))]
+
     parsed: list[DataFrame] = []
     for cols, g in groups.items():
         schema = ", ".join(f"`{c}` string" for c in cols)
@@ -259,54 +317,20 @@ def scan_csv(
             F.from_csv(
                 "line", schema, {"ignoreLeadingWhiteSpace": "true", "mode": "PERMISSIVE"}
             ).alias("r"),
-        ).select("Path", "r.*")
+            *[F.col(c).alias(n) for c, n in zip(carried, internal)],
+        ).select("Path", "r.*", *internal)
         parsed.append(df)
-
-    if not parsed:
-        return local_frame(spark, [], StructType([StructField("Path", StringType())]))
 
     out = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parsed)
     out = out.withColumn("File", F.element_at(F.split("Path", "/"), -1))
     directory = F.expr("substring(Path, 1, length(Path) - length(File) - 1)")
     out = out.withColumn("Directory", F.when(directory != "", directory).otherwise("."))
-    return attach_sidecar_meta(spark, out, files)
-
-
-def attach_sidecar_meta(
-    spark: SparkSession, df: DataFrame, files: list[str]
-) -> DataFrame:
-    """S7: per-file `.meta` YAML sidecars become constant columns via a
-    broadcast join on Path (reference assigns them per file,
-    aggregate.py:263-270)."""
-    import yaml as _yaml
-
-    metas: dict[str, dict] = {}
-    keys: list[str] = []
-    for f in files:
-        mf = f + ".meta"
-        if os.path.isfile(mf):
-            try:
-                with open(mf) as fd:
-                    m = _yaml.safe_load(fd) or {}
-            except Exception:
-                continue
-            metas[os.path.abspath(f)] = m
-            for k in m:
-                if k not in keys:
-                    keys.append(k)
-    if not metas:
-        return df
-    rows = [
-        tuple([p] + [None if k not in m else str(m[k]) for k in keys])
-        for p, m in metas.items()
-    ]
-    meta_df = local_frame(
-        spark, rows, StructType([StructField(k, StringType()) for k in ["Path", *keys]])
+    # a sidecar key overwrites a same-named data column (the reference's
+    # `df.assign(**meta)`), and the keys come last in first-seen order
+    data = [c for c in out.columns if c not in keys and c not in internal]
+    return out.select(
+        *[qcol(c) for c in data], *[qcol(i).alias(k) for i, k in zip(internal, keys)]
     )
-    # reference `df.assign(**meta)` OVERWRITES same-named data columns —
-    # drop the data-side column so the sidecar value wins
-    overlap = [k for k in keys if k in df.columns]
-    return df.drop(*overlap).join(F.broadcast(meta_df), "Path", "left")
 
 
 def _sqlite_jdbc_available(spark: SparkSession) -> bool:
@@ -380,11 +404,12 @@ def _with_lineage(df: DataFrame) -> DataFrame:
     """Attach Path/File/Directory (S6) from the `_metadata.file_path`
     hidden column: a real (deterministic) scan attribute, so Catalyst
     still pushes downstream recipe filters into the file source
-    (asserted in tests/test_plans.py)."""
+    (asserted in tests/test_plans.py). The column is a URI: Path is its
+    decoded path, so a space, `%` or `#` reads as itself. `url_decode`
+    also reads `+` as a space, so a literal `+` is escaped first."""
+    uri = F.regexp_replace(F.col("_metadata.file_path"), "^file:/*", "/")
     return (
-        df.withColumn(
-            "Path", F.regexp_replace(F.col("_metadata.file_path"), "^file:/*", "/")
-        )
+        df.withColumn("Path", F.url_decode(F.regexp_replace(uri, "\\+", "%2B")))
         .withColumn("File", F.element_at(F.split("Path", "/"), -1))
         .withColumn(
             "Directory",

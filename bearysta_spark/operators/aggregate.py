@@ -132,6 +132,16 @@ def group_agg(
     return df.groupBy(*[qcol(d) for d in dims]).agg(*aggs)
 
 
+def pivot_key(columns: Sequence[str]) -> Column:
+    """The pivot key of `columns`: the column cast to string, or several
+    joined with '|' (pandas MultiIndex column equivalent). The spelling
+    is Spark's cast (`1.0E10`, `0.1`); a null value is a null key unless
+    other columns are joined to it."""
+    if len(columns) != 1:
+        return F.concat_ws("|", *[qcol(c).cast("string") for c in columns])
+    return qcol(columns[0]).cast("string")
+
+
 def pivot_table(
     df: DataFrame,
     index: Sequence[str],
@@ -143,17 +153,12 @@ def pivot_table(
     """Wide pivot (A6): groupBy(index).pivot(columns).agg(func(values)).
 
     Multiple pivot columns are concatenated into one pivot key with '|'
-    (pandas MultiIndex column equivalent). Passing `column_values`
+    (`pivot_key`). Passing `column_values`
     (derivable from a recipe's `expected:` list) skips Spark's extra
     distinct-values job — important at scale where the distinct is a
     full shuffle of its own.
     """
-    key = (
-        F.concat_ws("|", *[qcol(c).cast("string") for c in columns])
-        if len(columns) != 1
-        else qcol(columns[0]).cast("string")
-    )
-    g = df.withColumn("__pivot_key", key).groupBy(*index)
+    g = df.withColumn("__pivot_key", pivot_key(columns)).groupBy(*index)
     p = g.pivot("__pivot_key", list(column_values) if column_values else None)
     if len(values) == 1:
         return p.agg(agg_expr(func, values[0]))

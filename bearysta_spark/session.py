@@ -56,7 +56,7 @@ def get_spark(app_name: str = "bearysta_spark", cpus: int | None = None) -> Spar
 
 def local_frame(
     spark: SparkSession,
-    rows: Sequence[Sequence[object]] | pd.DataFrame,
+    rows: Sequence[Sequence[object]] | pd.DataFrame | pa.Table,
     schema: StructType | None = None,
 ) -> DataFrame:
     """A small driver-built frame that stays inside the JVM.
@@ -68,11 +68,13 @@ def local_frame(
     `LocalRelation` instead, whatever `spark.sql.execution.arrow.pyspark
     .enabled` says, and the rows are read as a local table scan.
 
-    `rows` is a sequence of tuples aligned with `schema`, or a pandas
-    frame; for a pandas frame `schema` may be omitted, and the column
-    types are then Arrow's inference from its dtypes (what
+    `rows` is a sequence of tuples aligned with `schema`, a pandas frame
+    or an Arrow table; for a pandas frame `schema` may be omitted, and
+    the column types are then Arrow's inference from its dtypes (what
     `createDataFrame` infers with the Arrow conf on).
     """
+    if isinstance(rows, pa.Table):
+        return spark.createDataFrame(rows, schema=schema)
     if isinstance(rows, pd.DataFrame):
         table = pa.Table.from_pandas(rows, preserve_index=False)
         return spark.createDataFrame(table, schema=schema)

@@ -48,3 +48,24 @@ def documents(spark, sf_dir):
 @pytest.fixture(scope="session")
 def embeddings(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+
+
+@pytest.fixture
+def jobs_during(spark):
+    """`fn -> the number of Spark jobs fn() starts`, counted in a job
+    group of its own by the status tracker."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def count(fn) -> int:
+        group = f"jobs-during-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

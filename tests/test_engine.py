@@ -378,8 +378,11 @@ def test_non_numeric_values_error(spark, tmp_path):
 
 def test_infer_numeric(spark):
     df = spark.createDataFrame(
-        [("1", "1.5", "x", "7", "NaN", "1"), ("2", "2", "3", "8", "2.5", "4")],
-        ["ints", "floats", "mixed", "ints2", "with_nan", "odd`key"],
+        [
+            ("1", "1.5", "x", "7", "NaN", "1", "-nan", "99999999999999999999", "-9223372036854775808"),
+            ("2", "2", "3", "8", "2.5", "4", " +NaN", "1", "9223372036854775807"),
+        ],
+        ["ints", "floats", "mixed", "ints2", "with_nan", "odd`key", "signed_nan", "big", "longs"],
     )
     out = infer_numeric(df)
     t = dict(out.dtypes)
@@ -390,7 +393,14 @@ def test_infer_numeric(spark):
     assert t["with_nan"] == "double"  # 'NaN' parses as double NaN
     # a backtick in the name (a sidecar key or CSV header can carry one)
     assert t["odd`key"] == "bigint"
-    assert [r["odd`key"] for r in out.collect()] == [1, 4]
+    # a signed NaN is NaN, and an integer a long cannot hold makes the
+    # column double, as in pandas
+    assert (t["signed_nan"], t["big"], t["longs"]) == ("double", "double", "bigint")
+    rows = out.collect()
+    assert [r["odd`key"] for r in rows] == [1, 4]
+    assert all(math.isnan(r["signed_nan"]) for r in rows)
+    assert [r["big"] for r in rows] == [1e20, 1.0]
+    assert [r["longs"] for r in rows] == [-(2**63), 2**63 - 1]
 
 
 def test_variants_pivot_tables(spark, tmp_path):
@@ -706,6 +716,38 @@ def test_sidecar_keys_with_space_and_backtick(spark, tmp_path):
     assert (row["host name"], row["odd`key"]) == ("h1", "k1")
 
 
+def test_sidecar_keys_named_like_the_readers_columns(spark, tmp_path):
+    from bearysta_spark.engine.sources import scan_csv
+
+    a = write(tmp_path / "a.out", "1,2\n3,4\n")
+    write(tmp_path / "a.out.meta", "line: l1\npath: p1\nchunk_id: c1\nlocal_idx: i1\n")
+    b = write(tmp_path / "b.out", "5,6\n")
+    keys = ["line", "path", "chunk_id", "local_idx"]
+    want = {("1", "2", "l1", "p1", "c1", "i1"), ("3", "4", "l1", "p1", "c1", "i1"), ("5", "6", None, None, None, None)}
+    # the plain scan, and the filtered (cached) one over 4-byte chunks;
+    # a CSV column may also be named like the internal sidecar columns
+    for line_filter, mb in ((None, None), ({"": None}, 4e-6)):
+        out = scan_csv(spark, [a, b], "x,_sidecar0", line_filter, split_files_over_mb=mb)
+        assert out.columns == ["Path", "x", "_sidecar0", "File", "Directory", *keys]
+        assert {tuple(r[c] for c in ["x", "_sidecar0", *keys]) for r in out.collect()} == want
+
+
+# ---------------------------------------------------------------------------
+# S6 lineage of the columnar scans
+# ---------------------------------------------------------------------------
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "orc", "json"])
+def test_columnar_scan_path_is_the_literal_path(spark, tmp_path, fmt):
+    from bearysta_spark.engine import sources
+
+    d = tmp_path / "odd dir%20#x+y" / f"a b%25+c#{fmt}"
+    spark.createDataFrame([("a", 1)], ["k", "i"]).write.format(fmt).save(str(d))
+    r = getattr(sources, f"scan_{fmt}")(spark, [str(d)]).first()
+    assert r["Directory"] == str(d)
+    assert r["Path"] == str(d / r["File"])
+
+
 # ---------------------------------------------------------------------------
 # numeric inference passes and the engine's cache lifetime
 # ---------------------------------------------------------------------------
@@ -872,11 +914,12 @@ def test_settled_columns_keep_the_reprobed_verdicts(spark, tmp_path, case):
 
 
 def _inferred(values: list[str | None]) -> tuple[str, list]:
-    """The inference rule in pure Python: spaces stripped, a column of
-    strings that all parse as numbers becomes bigint when every one is
-    an integer, else double; an all-null or empty column stays string.
-    Two casting edges are Spark's: an integer outside the bigint range
-    becomes null, and so does a signed NaN not spelled `NaN`."""
+    """The inference rule in pure Python, as pandas' `to_numeric` reads
+    an object column: spaces stripped, a column of strings that all
+    parse as numbers becomes bigint when every one is an integer a long
+    holds, else double (pandas would give uint64 or float for a larger
+    integer; Spark has no uint64); a signed NaN (`-nan`, `+nan`) is
+    NaN; an all-null or empty column stays string."""
     present = [v.strip(" ") for v in values if v is not None]
 
     def parses(f, v):
@@ -888,21 +931,9 @@ def _inferred(values: list[str | None]) -> tuple[str, list]:
 
     if not present or not all(parses(float, v) for v in present):
         return "string", values
-    if all(parses(int, v) for v in present):
-
-        def to_long(v):
-            n = int(v.strip(" "))
-            return n if -(2**63) <= n < 2**63 else None
-
-        return "bigint", [None if v is None else to_long(v) for v in values]
-
-    def to_double(v):
-        v = v.strip(" ")
-        if v[0] in "+-" and v[1:].lower() == "nan" and v[1:] != "NaN":
-            return None
-        return float(v)
-
-    return "double", [None if v is None else to_double(v) for v in values]
+    if all(parses(int, v) and -(2**63) <= int(v) < 2**63 for v in present):
+        return "bigint", [None if v is None else int(v.strip(" ")) for v in values]
+    return "double", [None if v is None else float(v.strip(" ")) for v in values]
 
 
 _SPECIAL = st.sampled_from(

@@ -14,7 +14,7 @@ import pathlib
 import pytest
 from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
 
-from bearysta_spark.engine.sources import attach_sidecar_meta, lines_df, scan_csv
+from bearysta_spark.engine.sources import lines_df, scan_csv
 from bearysta_spark.operators import expected_fill
 from bearysta_spark.session import local_frame
 
@@ -56,18 +56,17 @@ def test_local_frame_rows_need_a_schema(spark):
         local_frame(spark, [("a",)])
 
 
-def test_sidecar_frame_is_local_and_broadcast_joined(spark, tmp_path):
+def test_sidecar_scan_is_local_and_has_no_join(spark, tmp_path):
     data = tmp_path / "a.out"
-    data.write_text("x\n")
+    data.write_text("x\n1\n")
     (tmp_path / "a.out.meta").write_text("env_name: e1\n")
-    df = local_frame(
-        spark, [(str(data),)], StructType([StructField("Path", StringType())])
-    )
-    out = attach_sidecar_meta(spark, df, [str(data)])
+    out = scan_csv(spark, [str(data)])
     assert_jvm_local(out)
-    physical = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in physical and "Path" in physical
-    assert out.collect()[0]["env_name"] == "e1"
+    # the sidecar values ride the chunk specs: nothing to join or broadcast
+    out.collect()
+    executed = out._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in executed and "BroadcastExchange" not in executed, executed
+    assert [(r["x"], r["env_name"]) for r in out.collect()] == [("1", "e1")]
 
 
 def test_chunk_spec_frame_is_local(spark, tmp_path):

@@ -325,3 +325,29 @@ def test_write_corpus_shards_partitions_and_manifest(spark, tmp_path):
     for f in files:
         vals = pq.read_table(f, columns=["n_chars"])["n_chars"].to_pylist()
         assert vals == sorted(vals), f
+
+
+def test_cli_builds_the_pivot_tables_once(tmp_path, capsys, spark, jobs_during):
+    data = tmp_path / "d.csv"
+    data.write_text("Arch,Prefix,Time\nicx,a,1.0\nicx,b,3.0\nspr,a,4.0\n")
+    cfg = tmp_path / "r.yml"
+    cfg.write_text(
+        textwrap.dedent(
+            f"""\
+            input:
+                path: '{data}'
+                format: csv
+            aggregation: mean
+            series: [Prefix]
+            variants: [Arch]
+            values: [Time]
+            """
+        )
+    )
+    pretty = jobs_during(lambda: cli_main([str(cfg), "-P"]))
+    both = jobs_during(lambda: cli_main([str(cfg), "-P", "--html", str(tmp_path / "o.html")]))
+    capsys.readouterr()
+    assert (tmp_path / "o.html").exists()
+    # --html only reads the two tables -P built: one job each, and no
+    # second pass over the aggregated plan
+    assert both == pretty + 2
