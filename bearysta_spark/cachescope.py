@@ -1,9 +1,10 @@
 """Scoped lifetime for the caches query helpers pin.
 
-Several operators cache a mid-plan frame that is BOTH materialized
-in-helper (a measured count for a broadcast gate) and referenced more
-than once by the returned plan — the shingle table in the LSH verify,
-BM25's per-doc norms, the HLL register frame. `.cache()` alone leaks:
+Several operators cache a mid-plan frame that is referenced more than
+once — by a driver-side collect in the helper (a Bloom filter build, a
+token total) and by the returned plan, or several times by the plan
+alone — the shingle table in the LSH verify, BM25's per-doc norms, the
+HLL register frame. `.cache()` alone leaks:
 Spark's CacheManager keeps the entry until someone unpersists it, so a
 long-lived multi-query session accumulates pinned storage (r05 VERDICT
 finding #3).

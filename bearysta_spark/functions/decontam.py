@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bearysta_spark.cachescope import scoped_cache
-from bearysta_spark.functions.dedup import BROADCAST_ROW_LIMIT, _gated_broadcast, _spread
+from bearysta_spark.functions.dedup import _spread
 
 
 def gram_rows(
@@ -138,9 +138,8 @@ def contaminated_docs_bloom(
     filter carries the same membership signal at ~10 bits/entry (a
     16 MB literal for 2^27 bits), the scan-side probe drops the ~99%+
     of corpus grams that can't match, and only Bloom survivors reach the
-    exact join — which is itself broadcast only while the MEASURED
-    distinct bench-gram count fits the row budget (the count is free:
-    the frame is cached and materialized by the Bloom build) and
+    exact join. That join carries no broadcast hint: AQE broadcasts the
+    bench grams while their measured size fits the threshold and
     otherwise shuffles on the gram key, which is affordable precisely
     because the Bloom probe already shrank the corpus side. Result is
     IDENTICAL to contaminated_docs (no false negatives; FPs die in the
@@ -149,22 +148,13 @@ def contaminated_docs_bloom(
     # verify join (otherwise the benchmark gram explode runs twice)
     bench_grams = scoped_cache(gram_rows(bench, n, text_col, ()).distinct())
     words = build_gram_bloom(bench_grams, nbits, num_hashes)
-    n_grams = bench_grams.count()
     arr, cond = bloom_contains(words, nbits, num_hashes)
     doc_grams = gram_rows(_spread(corpus), n, text_col, (id_col, *keep_cols))
     survivors = (
         doc_grams.withColumn("__bloom", arr).filter(cond).drop("__bloom")
     )
     return (
-        survivors.join(
-            _gated_broadcast(
-                bench_grams,
-                n_grams,
-                BROADCAST_ROW_LIMIT,
-                "contaminated_docs_bloom benchmark grams",
-            ),
-            "gram",
-        )
+        survivors.join(bench_grams, "gram")
         .groupBy(id_col, *keep_cols)
         .agg(F.count_distinct("gram").cast("long").alias("shared_grams"))
     )
@@ -185,9 +175,9 @@ def contaminated_docs(
     Contract: `bench` must be a genuinely small eval/benchmark set —
     its distinct gram table is hard-broadcast. When the "benchmark"
     side is corpus-proportional (e.g. a 10% validation split), use
-    contaminated_docs_bloom: identical results, broadcast gated on a
-    measured count, and a Bloom prefilter so the fallback shuffle only
-    moves surviving grams."""
+    contaminated_docs_bloom: identical results, no broadcast hint (AQE
+    picks the join from measured sizes), and a Bloom prefilter so a
+    shuffle join only moves surviving grams."""
     bench_grams = gram_rows(bench, n, text_col, ()).distinct()
     doc_grams = gram_rows(_spread(corpus), n, text_col, (id_col, *keep_cols))
     # Join BEFORE any distinct: the broadcast join filters corpus grams
@@ -306,12 +296,12 @@ def substring_anchor_hits(
     verbatim (the matched key itself), and a train-side region of
     train_run_chars whose stride-windows are all leaked.
 
-    100 TB shape: the eval window set broadcasts (gated the same way
-    the gram arms gate); the train side is one scan emitting
-    |bytes|/stride short rows that die at the broadcast hash join —
-    NO shuffle of corpus data; only true hits reach the (pair) rollup,
-    which is map-side-combinable. The guarantee knob trades scan rows
-    for sensitivity: L = window + stride − 1."""
+    100 TB shape: the eval window set broadcasts (AQE picks it from its
+    measured size, as in the gram arms); the train side is one scan
+    emitting |bytes|/stride short rows that die at the broadcast hash
+    join — NO shuffle of corpus data; only true hits reach the (pair)
+    rollup, which is map-side-combinable. The guarantee knob trades
+    scan rows for sensitivity: L = window + stride − 1."""
     w, s = int(window), int(stride)
     if w < 4 or s < 1:
         raise ValueError(f"window >= 4 and stride >= 1 required, got {w}, {s}")
@@ -345,15 +335,7 @@ def substring_anchor_hits(
     tr = train_anchor_rows(train, w, s, train_id, text_col).withColumnRenamed(
         "akey", "__key"
     )
-    evc = scoped_cache(ev)
-    hits = tr.join(
-        _gated_broadcast(
-            evc, evc.count(), BROADCAST_ROW_LIMIT, "eval window set"
-        ),
-        "__key",
-    ).select(
-        train_id, eval_id, "__p"
-    )
+    hits = tr.join(ev, "__key").select(train_id, eval_id, "__p")
     # consecutive-anchor runs: anchors are at positions ≡ 1 (mod s), so
     # (p − 1)/s − row_number() is constant within a consecutive run
     # (the gaps-and-islands idiom) — one window + one two-level rollup

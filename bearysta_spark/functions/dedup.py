@@ -24,12 +24,6 @@ from bearysta_spark.cachescope import scoped_cache
 
 logger = logging.getLogger(__name__)
 
-#: Row budget for broadcasting mid-plan frames that Catalyst cannot size.
-#: Rows here are (id, shingle)-grain, so ~50-100 bytes each — 2M rows is
-#: ~100-200 MB, inside a sane executor broadcast budget with headroom.
-#: Callers pass an explicit limit to tighten/loosen per deployment.
-BROADCAST_ROW_LIMIT = 2_000_000
-
 #: Cap on hot-key rows collected to the driver by the oversized-bucket/
 #: block backstops. The hot-key set is bounded by rows/max_size, but a
 #: degenerate templated corpus at 100 TB can still push that into the
@@ -98,29 +92,6 @@ def _drop_hot_keys(
         collect_limit,
     )
     return frame.join(hot.select(*keys), keys, "left_anti")
-
-
-def _gated_broadcast(frame: DataFrame, n_rows: int, limit: int, what: str) -> DataFrame:
-    """Broadcast `frame` only when its *measured* row count fits the
-    budget; otherwise return it unhinted (with a logged notice) so AQE
-    picks a shuffle hash / sort-merge join.
-
-    Why: a hard F.broadcast on a corpus-proportional frame is correct
-    and fast at benchmark scale but forces an executor OOM at 100× —
-    the hint removes Catalyst's freedom to fall back. Gating on a
-    measured count (already computed upstream in every caller) keeps
-    the fast path when it is safe and degrades to a shuffle, loudly,
-    when it is not (no-silent-caps discipline)."""
-    if n_rows <= limit:
-        return F.broadcast(frame)
-    logger.warning(
-        "%s: measured %d rows exceeds broadcast row budget %d; "
-        "dropping the broadcast hint — AQE will pick a shuffle join",
-        what,
-        n_rows,
-        limit,
-    )
-    return frame
 
 
 def content_hash(text: str | Column) -> Column:
@@ -607,7 +578,6 @@ def minhash_dedup_verified(
     threshold: float = 0.5,
     oracle_safe: bool = True,
     max_df_frac: float | None = None,
-    broadcast_row_limit: int = BROADCAST_ROW_LIMIT,
     max_bucket_size: int | None = None,
     cap_stats_out: dict | None = None,
 ) -> DataFrame:
@@ -629,13 +599,12 @@ def minhash_dedup_verified(
     stream stay twin-equal on corpora where the cap bites from the
     start (streaming/curation.py documents the cap-crossing window).
 
-    Broadcast safety: the candidate frame and the candidate×shingle
+    Join strategy: the candidate frame and the candidate×shingle
     expansion both grow with the corpus (candidates × shingles/doc), so
-    their broadcast hints are gated on measured counts via
-    _gated_broadcast — at benchmark scale both fit and the verify is
-    broadcast-probe fast; past broadcast_row_limit the hint is dropped
-    (logged) and the verify joins shuffle on their equi-keys instead of
-    forcing an OOM.
+    no join carries a broadcast hint. AQE broadcasts a side whose
+    measured map output fits spark.sql.adaptive.autoBroadcastJoinThreshold
+    and otherwise joins shuffled on the equi-keys — the same results
+    either way, and no count job runs while the plan is built.
     """
     # one shingle explode+distinct, cached, shared by signature build,
     # size counts, and both verify joins
@@ -643,49 +612,18 @@ def minhash_dedup_verified(
     if max_df_frac is not None:
         sh = drop_boilerplate_shingles(sh, df.count(), id_col, max_df_frac)
     sh = scoped_cache(sh)
-    cand = scoped_cache(
-        minhash_lsh_pairs(
-            df, text_col, id_col, k, num_hashes, bands, oracle_safe, sh=sh,
-            max_bucket_size=max_bucket_size, cap_stats_out=cap_stats_out,
-        )
+    cand = minhash_lsh_pairs(
+        df, text_col, id_col, k, num_hashes, bands, oracle_safe, sh=sh,
+        max_bucket_size=max_bucket_size, cap_stats_out=cap_stats_out,
     )
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("sz"))
-    sz_a = sizes.withColumnsRenamed({id_col: "id_a", "sz": "sz_a"})
-    # measured sizes for the broadcast gates: candidate pair count, and
-    # the exact row count of the candidate×shingle expansion (sum of
-    # a-side shingle counts over candidates). Both run over cached
-    # frames; this is the price of not hard-broadcasting a
-    # corpus-proportional frame. r13 optimization (guide §1.2: fewer
-    # driver barriers): ONE job measures both — every candidate id
-    # comes from a bucket of `sh`-derived signatures, so the sizes
-    # inner join is row-preserving and count(*) over it IS the
-    # candidate count.
-    gate = cand.join(sz_a, "id_a").agg(
-        F.count("*").alias("nc"), F.sum("sz_a").alias("er")
-    ).collect()[0]
-    n_cand = gate["nc"]
-    exp_rows = gate["er"] or 0
-
     a = sh.withColumnsRenamed({id_col: "id_a", "shingle": "sh_a"})
     b = sh.withColumnsRenamed({id_col: "b_id", "shingle": "sh_b"})
-    # candidate set is LSH-pruned and the expansion is candidate-bounded
-    # — both orders of magnitude smaller than the corpus shingle table
-    # they probe, but mid-plan where Catalyst has no size statistics, so
-    # hint broadcast iff the measured count fits. The b-side join is a
-    # composite-key equi-join (id AND shingle) — no per-pair cross
-    # product either way.
-    expanded = _gated_broadcast(
-        _gated_broadcast(
-            cand, n_cand, broadcast_row_limit, "minhash_dedup_verified candidates"
-        ).join(a, "id_a"),
-        exp_rows,
-        broadcast_row_limit,
-        "minhash_dedup_verified candidate-shingle expansion",
-    )
+    # the b-side join is a composite-key equi-join (id AND shingle) —
+    # no per-pair cross product whichever strategy AQE picks
     inter = (
-        expanded.join(
-            b, (F.col("id_b") == F.col("b_id")) & (F.col("sh_a") == F.col("sh_b"))
-        )
+        cand.join(a, "id_a")
+        .join(b, (F.col("id_b") == F.col("b_id")) & (F.col("sh_a") == F.col("sh_b")))
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("inter"))
     )
@@ -895,7 +833,6 @@ def prefix_jaccard_join(
     id_col: str = "doc_id",
     threshold: tuple[int, int] = (1, 2),
     ngram: int = 3,
-    broadcast_row_limit: int = BROADCAST_ROW_LIMIT,
 ) -> DataFrame:
     """Exact-recall set-similarity self-join via prefix filtering
     (Chaudhuri et al. / Vernica et al.): returns all pairs whose
@@ -912,16 +849,16 @@ def prefix_jaccard_join(
     per-doc sorted xxhash64 arrays joined onto the candidate pairs —
     per-row codegen, nothing pair×shingle-sized shuffles.
 
-    100 TB shape: DF table is shingle-vocabulary-sized (broadcast);
+    100 TB shape: DF table is shingle-vocabulary-sized (AQE broadcasts
+    it while it fits);
     per-doc ordering is an id-partitioned window; candidates are the
     only quadratic surface and carry ids only. Compare
     minhash_dedup_verified: probabilistic recall, no DF pass; this
     operator: guaranteed recall, one extra vocab-sized aggregate.
     The per-doc sorted-array frames carry every doc's shingle hashes —
-    a corpus-proportional payload — so their broadcast hints are gated
-    on the measured total shingle count (_gated_broadcast): below
-    broadcast_row_limit the verify is a broadcast probe, above it the
-    verify joins shuffle on doc ids with a logged notice.
+    a corpus-proportional payload — so they carry no broadcast hint:
+    AQE broadcasts them while their measured size fits the threshold,
+    and otherwise the verify joins shuffle on doc ids.
 
     Output columns: doc_a, doc_b, inter_size, union_size, jaccard.
     """
@@ -929,10 +866,6 @@ def prefix_jaccard_join(
 
     p, q = threshold
     sh = scoped_cache(word_ngram_shingles(df, text_col, id_col, ngram))
-    # total (doc, shingle) rows == sum of the per-doc array lengths the
-    # verify side would broadcast — the honest payload measure for the
-    # broadcast gate (doc count alone under-counts array-weighted rows)
-    n_sh = sh.count()
     df_tbl = sh.groupBy("shingle").agg(F.count("*").cast("long").alias("doc_freq"))
     # r14 (guide §2.4 share one exchange): the per-doc size used to be a
     # separate groupBy aggregate joined in TWICE (into `ordered` and
@@ -945,7 +878,7 @@ def prefix_jaccard_join(
     wid = Window.partitionBy(id_col)
     w = wid.orderBy("doc_freq", "shingle")
     ordered = (
-        sh.join(F.broadcast(df_tbl), "shingle")
+        sh.join(df_tbl, "shingle")
         .withColumn("n", F.count("*").over(wid).cast("long"))
         .withColumn("rn", F.row_number().over(w).cast("long"))
     )
@@ -987,18 +920,8 @@ def prefix_jaccard_join(
     )
     # J ≥ p/q ⟺ (p+q)·inter ≥ p·(na+nb), integer-exact
     return (
-        cand.join(
-            _gated_broadcast(
-                aa, n_sh, broadcast_row_limit, "prefix_jaccard_join a-side arrays"
-            ),
-            "doc_a",
-        )
-        .join(
-            _gated_broadcast(
-                bb, n_sh, broadcast_row_limit, "prefix_jaccard_join b-side arrays"
-            ),
-            "doc_b",
-        )
+        cand.join(aa, "doc_a")
+        .join(bb, "doc_b")
         .withColumn(
             "inter_size",
             F.size(F.array_intersect("shs_a", "shs_b")).cast("long"),

@@ -30,10 +30,9 @@ logger = logging.getLogger(__name__)
 #: is ~5·10⁷ candidate pairs — the point past which an exact quadratic
 #: pass stops being the right tool and the caller should either raise
 #: (default) or route through the SemDeDup cell-bounded pair surface.
-#: Same discipline as dedup.BROADCAST_ROW_LIMIT: the r05 scale ladder
-#: measured the ungated kernel at 1.70 per-mult (the only super-linear
-#: query in the inventory); every other dangerous shape in this repo is
-#: gated on a measured size, so this one is too.
+#: The r05 scale ladder measured the unbounded kernel at 1.70 per-mult
+#: (the only super-linear query in the inventory), so its input size is
+#: checked before the quadratic pass runs.
 EXACT_PAIRS_ROW_BUDGET = 10_000
 
 

@@ -20,9 +20,9 @@ corpus-bounded — and per-document counts come from an equi-join of the
 (doc, word) occurrence rows against the per-word counts. The corpus
 side stays in JVM codegen (regexp explode + join + sum); Python
 touches one row per distinct word per batch, Arrow-batched. The
-per-word count table is broadcast behind the measured-size gate
-(functions.dedup._gated_broadcast), falling back to a shuffle join on
-the word key when a pathological corpus blows the vocabulary up.
+per-word count table joins with no broadcast hint: AQE broadcasts it
+from its measured size and shuffles on the word key when a
+pathological corpus blows the vocabulary up.
 
 Vocabulary/merge provenance: hand-written frequency-ordered English
 subwords (public knowledge — any real deployment swaps in its model's
@@ -43,11 +43,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bearysta_spark.functions.dedup import (
-    BROADCAST_ROW_LIMIT,
-    _gated_broadcast,
-    _spread,
-)
+from bearysta_spark.functions.dedup import _spread
 
 WORD_PATTERN = "[a-z0-9]+"
 
@@ -217,7 +213,7 @@ def word_occurrences(
     )
 
 
-def _distinct_word_counts(occ: DataFrame, counter, label: str) -> DataFrame:
+def _distinct_word_counts(occ: DataFrame, counter) -> DataFrame:
     """(word, n_tokens) for every distinct word via an Arrow-batched
     kernel — the only Python in the pipeline, over the
     vocabulary-bounded distinct-word table."""
@@ -240,10 +236,8 @@ def _distinct_word_counts(occ: DataFrame, counter, label: str) -> DataFrame:
 def _token_counts(
     df: DataFrame,
     counter,
-    label: str,
     text_col: str,
     id_col: str,
-    broadcast_row_limit: int,
     occ: DataFrame | None = None,
 ) -> DataFrame:
     # occ: a caller-supplied (id, word) occurrence frame — callers that
@@ -254,17 +248,8 @@ def _token_counts(
     # semantically; None keeps the self-contained single-query shape.
     if occ is None:
         occ = word_occurrences(df, text_col, id_col)
-    # gate the broadcast on the DISTINCT-word count measured JVM-side —
-    # same number as counts.count() but it never runs the Python kernel
-    # and needs no cache, so the kernel executes exactly once, lazily,
-    # inside the returned plan (r06: replaced a cache that outlived the
-    # helper)
-    n_vocab = occ.select("word").distinct().count()
-    counts = _distinct_word_counts(occ, counter, label)
-    joined = occ.join(
-        _gated_broadcast(counts, n_vocab, broadcast_row_limit, label), "word"
-    )
-    return joined.groupBy(id_col).agg(
+    counts = _distinct_word_counts(occ, counter)
+    return occ.join(counts, "word").groupBy(id_col).agg(
         F.count("*").cast("long").alias("n_words"),
         F.sum("n_tokens").cast("long").alias("n_subword_tokens"),
     )
@@ -274,7 +259,6 @@ def wordpiece_token_counts(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_row_limit: int = BROADCAST_ROW_LIMIT,
     vocab: tuple[str, ...] | str | None = None,
     occ: DataFrame | None = None,
 ) -> DataFrame:
@@ -292,17 +276,13 @@ def wordpiece_token_counts(
         if isinstance(vocab, str):
             vocab = load_vocab_file(vocab)
         counter = make_wordpiece_len(vocab)
-    return _token_counts(
-        df, counter, "wordpiece_token_counts vocabulary",
-        text_col, id_col, broadcast_row_limit, occ=occ,
-    )
+    return _token_counts(df, counter, text_col, id_col, occ=occ)
 
 
 def bpe_token_counts(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_row_limit: int = BROADCAST_ROW_LIMIT,
     merges: tuple[tuple[str, str], ...] | str | None = None,
     occ: DataFrame | None = None,
 ) -> DataFrame:
@@ -323,10 +303,7 @@ def bpe_token_counts(
         else:
             check_well_formed_merges(merges)
         counter = make_bpe_len(merges)
-    return _token_counts(
-        df, counter, "bpe_token_counts vocabulary",
-        text_col, id_col, broadcast_row_limit, occ=occ,
-    )
+    return _token_counts(df, counter, text_col, id_col, occ=occ)
 
 
 def check_well_formed_merges(

@@ -6486,8 +6486,8 @@ def split_leakage_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     why this routes through contaminated_docs_bloom (result-identical
     to the exact path: Bloom has no false negatives and FPs die in the
     verify join): the filter literal is geometry-bounded, the probe
-    prunes train grams scan-side, and the verify join's broadcast is
-    gated on the measured gram count with a shuffle fallback."""
+    prunes train grams scan-side, and AQE picks the verify join from
+    the measured gram size (broadcast, or a shuffle of survivors)."""
     from bearysta_spark.functions.decontam import contaminated_docs_bloom
     from bearysta_spark.functions.sampling import hash_split
 
@@ -8540,8 +8540,8 @@ def subword_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     converts a word-count data budget into a real tokenizer bill.
     Scale shape: the subword walk runs only over the DISTINCT word
     table (vocabulary-bounded, Arrow-batched); the corpus-side explode,
-    join and sums are JVM codegen, and the per-word count table is
-    broadcast behind the measured-size gate. The DuckDB oracle replays
+    join and sums are JVM codegen, and AQE picks the join with the
+    per-word count table from its measured size. The DuckDB oracle replays
     the greedy walk exactly (precomputed longest-match step table + a
     recursive position walk over the same embedded vocabulary), so the
     subword counts are engine-verified, not just deterministic."""
@@ -9006,7 +9006,25 @@ _CLF_TRAIN_MWL10 = 45
 #: IDENTICAL 8-round trajectory; each query stays self-contained
 #: (trains on a cold key), but a bench/driver run over the family pays
 #: the training loop once per (corpus, geometry) instead of per query.
+#: The key carries the corpus files' (path, size, mtime_ns), so a
+#: corpus rewritten in place misses instead of serving the old history.
 _CLF_TRAIN_MEMO: dict[tuple, list] = {}
+
+
+def _files_fingerprint(path: str) -> tuple:
+    """(path, size, mtime_ns) of the file at `path`, or of every file
+    under the directory at `path` (a directory of part files)."""
+    import os
+
+    if os.path.isfile(path):
+        files = [path]
+    else:
+        files = sorted(
+            os.path.join(root, f) for root, _, fs in os.walk(path) for f in fs
+        )
+    return tuple(
+        (f, st.st_size, st.st_mtime_ns) for f in files for st in [os.stat(f)]
+    )
 
 
 def _clf_train_history(
@@ -9025,6 +9043,7 @@ def _clf_train_history(
     form of which is write_classifier_model)."""
     key = (
         sf_dir,
+        _files_fingerprint(f"{sf_dir}/documents.parquet"),
         word_ngrams,
         _CLF_TRAIN_DIM if dim is None else dim,
         _CLF_TRAIN_ROUNDS,
@@ -10464,38 +10483,23 @@ def _lm_count_tables(d: DataFrame):
         .groupBy("tok")
         .agg(F.count("*").cast("long").alias("c1"))
     )
-    # ONE driver barrier for both bounded scalars (r14, guide §1.2):
-    # the vocab count (broadcast gate) and the token total used to
-    # ride separate jobs — c1.count() per caller plus a crossJoin'd
-    # 1-row broadcast frame; the total enters downstream score
-    # expressions as a LITERAL now (same integer, same results)
-    g = c1.agg(
-        F.count("*").cast("long").alias("nv"),
-        F.sum("c1").cast("long").alias("t"),
-    ).collect()[0]
-    n_vocab, t = int(g["nv"]), int(g["t"] or 0)
+    # one driver barrier for the token total, which enters downstream
+    # score expressions as a LITERAL (not a crossJoin'd 1-row frame)
+    t = int(c1.agg(F.sum("c1").cast("long")).collect()[0][0] or 0)
     c2 = (
         train.select(F.explode(bigrams).alias("bg"))
         .select("bg.prev", "bg.cur")
         .groupBy("prev", "cur")
         .agg(F.count("*").cast("long").alias("c2"))
     )
-    return base, train, held, c1, n_vocab, t, c2, bigrams
+    return base, train, held, c1, t, c2, bigrams
 
 
-def _uni_side(c1, n_vocab, as_col: str, as_count: str):
-    """The unigram table keyed for one join side, broadcast-gated on
-    its measured count: a 100 TB corpus' unigram vocabulary (Heaps'
-    law) can exceed any broadcast budget — the count is one cheap job
-    on the already-cached frame, and past the budget AQE picks a
-    shuffle join instead of OOMing an executor."""
-    from bearysta_spark.functions.dedup import BROADCAST_ROW_LIMIT as _BRL
-    from bearysta_spark.functions.dedup import _gated_broadcast
-
-    return _gated_broadcast(
-        c1.select(F.col("tok").alias(as_col), F.col("c1").alias(as_count)),
-        n_vocab, _BRL, "LM unigram table",
-    )
+def _uni_side(c1, as_col: str, as_count: str):
+    """The unigram table keyed for one join side. No broadcast hint: a
+    100 TB corpus' unigram vocabulary (Heaps' law) can exceed any
+    broadcast budget, so AQE picks the join from its measured size."""
+    return c1.select(F.col("tok").alias(as_col), F.col("c1").alias(as_count))
 
 
 def _bigram_lm_scored(d: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -10514,14 +10518,14 @@ def _bigram_lm_scored(d: DataFrame) -> tuple[DataFrame, DataFrame]:
     back three times versus three extra parquet scans, and keeps the
     split/tokenize work from re-running per branch."""
     SCALE = _LM_SCALE
-    base, train, held, c1, n_vocab, t, c2, bigrams = _lm_count_tables(d)
+    base, train, held, c1, t, c2, bigrams = _lm_count_tables(d)
     he = held.select("doc_id", F.explode(bigrams).alias("bg")).select(
         "doc_id", "bg.prev", "bg.cur"
     )
     scored = (
         he.join(c2, ["prev", "cur"], "left")
-        .join(_uni_side(c1, n_vocab, "prev", "c1p"), "prev", "left")
-        .join(_uni_side(c1, n_vocab, "cur", "c1c"), "cur", "left")
+        .join(_uni_side(c1, "prev", "c1p"), "prev", "left")
+        .join(_uni_side(c1, "cur", "c1c"), "cur", "left")
         .select(
             "doc_id",
             F.expr(
@@ -10565,10 +10569,10 @@ def _trigram_lm_scored(d: DataFrame) -> tuple[DataFrame, DataFrame]:
     100 TB shape: like the bigram scorer plus one more shuffle
     equi-join — the trigram table joins on (w1, w2, w3); the two
     bigram lookups reuse ONE c2 table (denominator and backoff
-    numerator), and the unigram lookups ride the same measured-count
-    broadcast gate."""
+    numerator), and the unigram lookups join like the bigram model's
+    (AQE picks the strategy from measured sizes)."""
     SCALE = _LM_SCALE
-    base, train, held, c1, n_vocab, t, c2, _bigrams = _lm_count_tables(d)
+    base, train, held, c1, t, c2, _bigrams = _lm_count_tables(d)
     trigrams = F.when(
         F.size("ws") >= 3,
         F.transform(
@@ -10610,8 +10614,8 @@ def _trigram_lm_scored(d: DataFrame) -> tuple[DataFrame, DataFrame]:
             ["w2", "w3"],
             "left",
         )
-        .join(_uni_side(c1, n_vocab, "w2", "c1m"), "w2", "left")
-        .join(_uni_side(c1, n_vocab, "w3", "c1c"), "w3", "left")
+        .join(_uni_side(c1, "w2", "c1m"), "w2", "left")
+        .join(_uni_side(c1, "w3", "c1c"), "w3", "left")
         .select(
             "doc_id",
             F.expr(
@@ -10694,9 +10698,10 @@ def bpe_trained_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
     committing a vocab — and it closes the loop end-to-end: train
     distributed, bill distributed, replay both in SQL.
     100 TB shape: training as in bpe_train_merges (vocab-bounded
-    rounds); billing is the occurrence stream joined to the
-    measured-size-gated per-word count table — the same join shape as
-    bpe_token_stats. Integers until the one final division."""
+    rounds); billing is the occurrence stream joined to the per-word
+    count table (AQE picks the join from its measured size) — the same
+    join shape as bpe_token_stats. Integers until the one final
+    division."""
     d = _t(spark, sf_dir, "documents")
     return _bpe_trained_compression_df(d)
 
@@ -10709,24 +10714,13 @@ def _bpe_trained_compression_df(
     tokenization across its three arms (r14, guide §2.4); occ=None is
     the registered single-query shape (identical plan to before the
     refactor)."""
-    from bearysta_spark.functions.dedup import (
-        BROADCAST_ROW_LIMIT as _BRL,
-    )
-    from bearysta_spark.functions.dedup import _gated_broadcast
-
     if occ is None:
         occ = TK.word_occurrences(d)
     words = occ.groupBy("word").agg(F.count("*").cast("long").alias("freq"))
     _merges, state = TK.bpe_train(words, num_merges=10, return_state=True)
     wc = state.groupBy("word").agg(F.count("*").cast("long").alias("n_tok"))
-    n_vocab = wc.count()  # cheap: state is a scratch-parquet scan
     return (
-        occ.join(
-            _gated_broadcast(
-                wc, n_vocab, _BRL, "bpe_trained_compression word counts"
-            ),
-            "word",
-        )
+        occ.join(wc, "word")
         .join(d.select("doc_id", "source"), "doc_id")
         .groupBy("source")
         .agg(
@@ -11586,7 +11580,6 @@ def eval_containment_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "eval_substring_decontam",
-    scoped_caches=True,
     oracle="""
     WITH ev AS (
       SELECT doc_id AS eval_id, substr(text, 41, 40) AS snip
@@ -11654,7 +11647,9 @@ def eval_substring_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     substring when the eval occurrences are contiguous — see
     substring_anchor_hits' docstring for the exact guarantee).
 
-    100 TB shape: the eval window set DISTINCTs and broadcasts (gated);
+    100 TB shape: the eval window set DISTINCTs and broadcasts (AQE
+    picks the broadcast from its measured size, so building the plan
+    runs no Spark job and pins no cache);
     the train side is one scan emitting |bytes|/stride short keys that
     die at the broadcast hash join — corpus data is never shuffled;
     only true hits reach the pair rollup. Sensitivity/scan-row
@@ -11679,7 +11674,7 @@ def eval_substring_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-@query("eval_substring_decontam_persisted", scoped_caches=True)
+@query("eval_substring_decontam_persisted")
 def eval_substring_decontam_persisted(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -11761,29 +11756,20 @@ def unigram_viterbi_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: the house tokenizer contract — Python touches ONLY
     the distinct-word table (vocab-bounded, Heaps' law); the
     corpus-proportional occurrence stream stays JVM-side and joins the
-    per-word bill behind the measured-size broadcast gate."""
-    from bearysta_spark.functions.dedup import BROADCAST_ROW_LIMIT as _BRL
-    from bearysta_spark.functions.dedup import _gated_broadcast
-
+    per-word bill (AQE picks the join from its measured size)."""
     from bearysta_spark.scratch import materialize_distributed
 
     d = _t(spark, sf_dir, "documents")
     occ = TK.word_occurrences(d)
-    # scratch-materialized like bpe_train's state: the vocab-bounded
-    # bill is referenced by the broadcast gate's count AND the join —
-    # un-truncated, each reference re-derives the occurrence scan +
-    # distinct + the Python DP
+    # scratch-materialized like bpe_train's state: the Python DP runs
+    # at build time over the distinct words, and the returned plan
+    # reads the corpus only for the occurrence stream and the source
+    # join (tests/test_plans.py SCAN_BUDGETS)
     wc = materialize_distributed(
         TK.viterbi_piece_counts(occ.select("word").distinct()), "spvit"
     )
-    n_vocab = wc.count()
     return (
-        occ.join(
-            _gated_broadcast(
-                wc, n_vocab, _BRL, "unigram_viterbi word bill"
-            ),
-            "word",
-        )
+        occ.join(wc, "word")
         .join(d.select("doc_id", "source"), "doc_id")
         .groupBy("source")
         .agg(
@@ -11858,26 +11844,15 @@ def unigram_trained_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
     bill with the same char-fallback arms as the engine kernel.
     100 TB shape: training as in unigram_train_pieces (vocab-bounded
     Arrow passes, driver model state); billing is the occurrence
-    stream joined to the measured-size-gated per-word bill — the
-    bpe_trained_compression join shape. Integers until the one final
-    division."""
-    from bearysta_spark.functions.dedup import (
-        BROADCAST_ROW_LIMIT as _BRL,
-    )
-    from bearysta_spark.functions.dedup import _gated_broadcast
-
+    stream joined to the per-word bill (AQE picks the join from its
+    measured size) — the bpe_trained_compression join shape. Integers
+    until the one final division."""
     d = _t(spark, sf_dir, "documents")
     occ = TK.word_occurrences(d)
     words = occ.groupBy("word").agg(F.count("*").cast("long").alias("freq"))
     _inv, wc = TK.unigram_train(words, return_word_bill=True)
-    n_vocab = wc.count()  # cheap: wc is a scratch-parquet scan
     return (
-        occ.join(
-            _gated_broadcast(
-                wc, n_vocab, _BRL, "unigram_trained_compression word bill"
-            ),
-            "word",
-        )
+        occ.join(wc, "word")
         .join(d.select("doc_id", "source"), "doc_id")
         .groupBy("source")
         .agg(
@@ -12361,9 +12336,9 @@ def trigram_backoff_surprise(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: one corpus scan (base scoped-cached, pinned in
     test_plans); the trigram and bigram tables join by shuffle
     equi-join (n-gram vocab outgrows any broadcast budget — AQE picks
-    the strategy), the unigram lookups ride the measured-count
-    broadcast gate, and the report is a top-k TakeOrdered. One more
-    shuffle join than order 2 — the cost of one more backoff level,
+    the strategy), the unigram lookups are vocab-bounded joins AQE
+    broadcasts while they fit, and the report is a top-k TakeOrdered.
+    One more shuffle join than order 2 — the cost of one more backoff level,
     linear in the held token stream either way."""
     d = _t(spark, sf_dir, "documents")
     scored, base = _trigram_lm_scored(d)
@@ -13067,12 +13042,8 @@ def corpus_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100 TB shape: one cached split+tokenize scan feeds the old count
     table, the new per-lang count table, and the billing join; both
-    code-length tables are vocab-bounded and broadcast behind the
-    measured-count gate; output is L rows."""
-    from bearysta_spark.functions.dedup import (
-        BROADCAST_ROW_LIMIT,
-        _gated_broadcast,
-    )
+    code-length tables are vocab-bounded and AQE picks their joins from
+    their measured sizes; output is L rows."""
     from bearysta_spark.functions.sampling import hash_split
 
     d = _t(spark, sf_dir, "documents")
@@ -13091,16 +13062,9 @@ def corpus_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("tok")
         .agg(F.count("*").cast("long").alias("c"))
     )
-    # one driver barrier per snapshot for both bounded scalars (r14,
-    # guide §1.2): vocab count (broadcast gate) + token total — was a
-    # count() job, a separate t_old.collect() job, and two crossJoin'd
-    # 1-row broadcast frames; the totals enter the code-length
-    # expressions as literals (same integers, same bits)
-    g_old = co.agg(
-        F.count("*").cast("long").alias("nv"),
-        F.sum("c").cast("long").alias("t"),
-    ).collect()[0]
-    n_old_vocab, t_old = int(g_old["nv"]), int(g_old["t"] or 0)
+    # one driver barrier per snapshot token total; the totals enter the
+    # code-length expressions as literals (not crossJoin'd 1-row frames)
+    t_old = int(co.agg(F.sum("c").cast("long")).collect()[0][0] or 0)
     so = co.select(
         "tok",
         (F.length(F.bin(F.expr(f"{t_old} div c"))) - 1)
@@ -13113,11 +13077,7 @@ def corpus_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("long").alias("c"))
     )
     cng = cn.groupBy("tok").agg(F.sum("c").cast("long").alias("c"))
-    g_new = cng.agg(
-        F.count("*").cast("long").alias("nv"),
-        F.sum("c").cast("long").alias("t"),
-    ).collect()[0]
-    n_new_vocab, t_new = int(g_new["nv"]), int(g_new["t"] or 0)
+    t_new = int(cng.agg(F.sum("c").cast("long")).collect()[0][0] or 0)
     sn = cng.select(
         "tok",
         (F.length(F.bin(F.expr(f"{t_new} div c"))) - 1)
@@ -13127,21 +13087,8 @@ def corpus_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # floor(log2 t)+1 bits == length(bin(t)) for t >= 1 — driver-side
     esc = F.lit(t_old.bit_length()).cast("long")
     billed = (
-        cn.join(
-            _gated_broadcast(
-                sn, n_new_vocab, BROADCAST_ROW_LIMIT,
-                "new-snapshot code-length table",
-            ),
-            "tok",
-        )
-        .join(
-            _gated_broadcast(
-                so, n_old_vocab, BROADCAST_ROW_LIMIT,
-                "old-snapshot code-length table",
-            ),
-            "tok",
-            "left",
-        )
+        cn.join(sn, "tok")
+        .join(so, "tok", "left")
         .groupBy("lang")
         .agg(
             F.sum("c").cast("long").alias("n_tokens"),
@@ -13175,15 +13122,10 @@ def _doremi_loss_rows(
     """The distributed half of the DoReMi pair: per-source (domain,
     n_tokens, total_surprisal_bits) under the corpus-global unigram
     code-length model — one cached tokenization scan feeding the
-    vocab-bounded count table and the per-domain surprisal sum, the
-    surprisal table broadcast behind the measured-count gate. Collected
-    as <= D bounded model rows for the exact-integer EG loop. Callers
+    vocab-bounded count table and the per-domain surprisal sum (AQE
+    picks the surprisal join from its measured size). Collected as
+    <= D bounded model rows for the exact-integer EG loop. Callers
     must be registered scoped_caches=True."""
-    from bearysta_spark.functions.dedup import (
-        BROADCAST_ROW_LIMIT,
-        _gated_broadcast,
-    )
-
     d = _t(spark, sf_dir, "documents")
     base = scoped_cache(
         d.select(
@@ -13197,15 +13139,9 @@ def _doremi_loss_rows(
     c1 = scoped_cache(
         toks.groupBy("tok").agg(F.count("*").cast("long").alias("c"))
     )
-    # one driver barrier for both bounded scalars (r14, guide §1.2):
-    # vocab count (broadcast gate) + token total, previously a count()
-    # job plus a crossJoin'd 1-row broadcast frame; the total enters
-    # the surprisal expression as a literal (same integer, same bits)
-    g = c1.agg(
-        F.count("*").cast("long").alias("nv"),
-        F.sum("c").cast("long").alias("t"),
-    ).collect()[0]
-    n_vocab, t = int(g["nv"]), int(g["t"] or 0)
+    # one driver barrier for the token total, which enters the
+    # surprisal expression as a literal (not a crossJoin'd 1-row frame)
+    t = int(c1.agg(F.sum("c").cast("long")).collect()[0][0] or 0)
     su = c1.select(
         "tok",
         (F.length(F.bin(F.expr(f"{t} div c"))) - 1)
@@ -13213,13 +13149,7 @@ def _doremi_loss_rows(
         .alias("s"),
     )
     per = (
-        toks.join(
-            _gated_broadcast(
-                su, n_vocab, BROADCAST_ROW_LIMIT,
-                "unigram surprisal table",
-            ),
-            "tok",
-        )
+        toks.join(su, "tok")
         .groupBy("dom")
         .agg(
             F.count("*").cast("long").alias("n"),
@@ -13263,7 +13193,7 @@ def doremi_domain_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     and runs the EG loop in exact Python ints (_doremi_eg).
     100 TB shape: the corpus tokenization is cached once and read
     twice (count table + domain sum); the surprisal table is
-    vocab-bounded and broadcast behind the measured-count gate; the
+    vocab-bounded and AQE broadcasts it while it fits; the
     trajectory is O(D·rounds) driver arithmetic on a cache-line-sized
     frame. Consumers broadcast-join the D-row plan to drive
     per-domain sampling rates."""
@@ -14217,7 +14147,7 @@ def tokenizer_fertility_agreement(
     independently); the agreement join is source-grain."""
     # r14 (guide §2.4): the three arms each tokenized the corpus
     # themselves (word_occurrences evaluated once per billing join and
-    # once per vocabulary gate — ~6 corpus tokenizations per report);
+    # once per vocabulary count — ~6 corpus tokenizations per report);
     # ONE scope-cached occurrence frame now feeds all three pipelines.
     # Each arm's expressions are the registered pipelines' own
     # (_tpw_report / _token_counts / _bpe_trained_compression_df), so
@@ -14345,9 +14275,6 @@ _DRIVER_PRIORITY = [
     # r06-changed ones (bpe gains its oracle; the embedding queries run
     # through the exact-budget gate; the persisted queries moved index
     # roots; the scoped queries return finalized local relations) ----------
-    "quality_classifier_filter",
-    "image_phash_pairs",
-    "image_phash_increment_persisted",
     "semantic_decontam_report",
     "audio_fp_stats",
     "video_frame_dedup",

@@ -111,3 +111,14 @@ def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     assert df.count() > 0
     assert len(df.columns) >= 3
+
+
+def test_driver_priority_names_are_unique_and_registered():
+    # the driver order list is hand-kept: a repeated name is dead weight
+    # (only its first position counts) and an unregistered one is a typo
+    from bearysta_spark.queries import _DRIVER_PRIORITY, QUERIES
+
+    dups = sorted({n for n in _DRIVER_PRIORITY if _DRIVER_PRIORITY.count(n) > 1})
+    assert not dups, f"listed more than once: {dups}"
+    unknown = [n for n in _DRIVER_PRIORITY if n not in QUERIES]
+    assert not unknown, f"not registered: {unknown}"

@@ -473,98 +473,93 @@ def _plan(df) -> str:
 
 import contextlib
 
+_BROADCAST_THRESHOLDS = (
+    "spark.sql.autoBroadcastJoinThreshold",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold",
+)
+
 
 @contextlib.contextmanager
-def _no_auto_broadcast(spark):
-    """Disable stats-based auto-broadcast so any BroadcastHashJoin left
-    in a plan can only come from an explicit F.broadcast hint — the
-    discriminator the gate tests need. (With auto-broadcast on,
-    Catalyst rightly still broadcasts the small cached frames from
-    their accurate InMemoryRelation stats even when the hint is
-    dropped — that stats-based freedom is the point of the gate.)"""
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "-1")
+def _no_broadcast(spark):
+    """Turn off both the static and AQE's runtime broadcast thresholds,
+    so every join these operators build must run shuffled."""
+    old = {k: spark.conf.get(k, None) for k in _BROADCAST_THRESHOLDS}
+    for k in _BROADCAST_THRESHOLDS:
+        spark.conf.set(k, "-1")
     try:
         yield
     finally:
-        spark.conf.set(key, old)
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
-def test_minhash_verified_broadcast_gate(spark, documents):
-    # below the row budget the candidate frames carry broadcast hints;
-    # with the budget forced to 0 the hints must be dropped so the
-    # verify joins shuffle on their equi-keys — results identical
-    # either way (the gate changes physical strategy, never semantics)
-    kw = dict(num_hashes=12, bands=3, threshold=0.5)
-    # construct + materialize the gated frame INSIDE the context, with
-    # a cleared cache: cached subtrees freeze their physical plan at
-    # materialization time and are shared by logical-plan equality, so
-    # a prior run under normal conf would leak its broadcasts in here
-    with _no_auto_broadcast(spark):
+def _rows_under_both_strategies(spark, build):
+    """Build and run the operator under the default conf and with
+    broadcasts turned off; returns (default rows, default executed
+    plan, shuffled rows, shuffled executed plan). The cache is cleared
+    before each run: a cached subtree keeps the physical plan it was
+    materialized with."""
+    from bearysta_spark.cachescope import release_scoped_caches
+
+    runs = []
+    for ctx in (contextlib.nullcontext(), _no_broadcast(spark)):
         spark.catalog.clearCache()
-        gated = D.minhash_dedup_verified(documents, broadcast_row_limit=0, **kw)
-        p_gated = _plan(gated)
-        gated_rows = sorted(map(tuple, gated.collect()))
-    assert "BroadcastHashJoin" not in p_gated  # no hint left anywhere
-    assert ("SortMergeJoin" in p_gated) or ("ShuffledHashJoin" in p_gated)
+        with ctx:
+            df = build()
+            rows = sorted(map(tuple, df.collect()))
+            runs += [rows, _plan(df)]
     spark.catalog.clearCache()
-    fast = D.minhash_dedup_verified(documents, **kw)
-    assert "BroadcastHashJoin" in _plan(fast)  # hinted under normal conf
-    assert sorted(map(tuple, fast.collect())) == gated_rows
+    release_scoped_caches()
+    return runs
 
 
-def test_minhash_verified_gate_measurement_fused(spark, documents, monkeypatch):
-    # r13 optimization: the two broadcast-gate measurements (candidate
-    # pair count; candidate x shingle expansion rows) ride ONE fused
-    # job — this pins that the fused pair equals the two values the
-    # separate jobs used to measure, i.e. the sizes join really is
-    # row-preserving over the candidate set
-    seen = {}
-    real = D._gated_broadcast
-
-    def spy(df, n, limit, what):
-        seen[what] = n
-        return real(df, n, limit, what)
-
-    monkeypatch.setattr(D, "_gated_broadcast", spy)
-    kw = dict(num_hashes=12, bands=3)
-    D.minhash_dedup_verified(documents, threshold=0.5, **kw)
-    spark.catalog.clearCache()
-    cand = D.minhash_lsh_pairs(documents, **kw)
-    sizes = D.shingle_df(documents).groupBy("doc_id").agg(
-        F.count("*").alias("sz")
+def _assert_strategy_independent(spark, build):
+    rows, plan, shuffled_rows, shuffled_plan = _rows_under_both_strategies(
+        spark, build
     )
-    exp = (
-        cand.join(
-            sizes.withColumnsRenamed({"doc_id": "id_a", "sz": "sz_a"}),
-            "id_a",
-        )
-        .agg(F.sum("sz_a"))
-        .collect()[0][0]
-        or 0
+    assert rows, "vacuous: the operator found nothing to join"
+    assert "BroadcastHashJoin" in plan  # AQE broadcasts the small sides
+    assert "BroadcastHashJoin" not in shuffled_plan  # no hint is left
+    assert ("SortMergeJoin" in shuffled_plan) or ("ShuffledHashJoin" in shuffled_plan)
+    assert shuffled_rows == rows
+
+
+def test_minhash_verified_is_join_strategy_independent(spark, documents):
+    _assert_strategy_independent(
+        spark,
+        lambda: D.minhash_dedup_verified(
+            documents, num_hashes=12, bands=3, threshold=0.5
+        ),
     )
-    assert seen["minhash_dedup_verified candidates"] == cand.count()
-    assert seen["minhash_dedup_verified candidate-shingle expansion"] == exp
-    spark.catalog.clearCache()
 
 
-def test_prefix_jaccard_broadcast_gate(spark):
+def test_prefix_jaccard_is_join_strategy_independent(spark):
     rows = [
         (i, f"alpha beta gamma delta epsilon zeta token{i % 3} eta theta")
         for i in range(30)
     ]
     df = spark.createDataFrame(rows, "doc_id: long, text: string")
-    fast = D.prefix_jaccard_join(df, threshold=(1, 2))
-    gated = D.prefix_jaccard_join(df, threshold=(1, 2), broadcast_row_limit=0)
-    with _no_auto_broadcast(spark):
-        p_fast, p_gated = _plan(fast), _plan(gated)
-    # the vocab-sized DF-table hint stays in both plans (it is bounded
-    # by the shingle vocabulary, not the corpus); only the corpus-sized
-    # per-doc array broadcasts must disappear when gated
-    assert p_gated.count("BroadcastHashJoin") < p_fast.count("BroadcastHashJoin")
-    assert ("SortMergeJoin" in p_gated) or ("ShuffledHashJoin" in p_gated)
-    assert sorted(map(tuple, fast.collect())) == sorted(map(tuple, gated.collect()))
+    _assert_strategy_independent(
+        spark, lambda: D.prefix_jaccard_join(df, threshold=(1, 2))
+    )
+
+
+def test_substring_anchor_hits_is_join_strategy_independent(spark, documents):
+    from bearysta_spark.functions.decontam import substring_anchor_hits
+
+    ev = documents.filter(
+        (F.col("doc_id") % 17 == 0) & (F.length("text") >= 200)
+    ).select(
+        F.col("doc_id").alias("eval_id"),
+        F.substring("text", 41, 40).alias("text"),
+    )
+    tr = documents.filter(F.col("doc_id") % 17 != 0)
+    _assert_strategy_independent(
+        spark, lambda: substring_anchor_hits(tr, ev, window=16, stride=4)
+    )
 
 
 def test_incremental_lsh_persisted_index(spark, documents, tmp_path):

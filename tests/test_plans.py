@@ -313,8 +313,8 @@ def test_hll_shuffles_registers_not_keys(spark):
 def test_split_leakage_bloom_prefilter_and_gated_broadcast(spark):
     # routes through contaminated_docs_bloom: the train-side gram scan
     # carries the Bloom probe (xxhash64 shift/mask codegen, no Python),
-    # and at this sf the measured val-gram count is under the budget so
-    # the verify join still broadcasts
+    # and at this sf the val-gram table is small enough that the
+    # unhinted verify join still broadcasts
     p = plan_of(spark, "split_leakage_check")
     assert "xxhash64" in p  # Bloom probe reached the scan side
     assert "BroadcastExchange" in p
@@ -437,6 +437,51 @@ CACHE_SCOPED_SAMPLE = [
     "trigram_backoff_surprise",
     "trigram_perplexity_buckets",
 ]
+
+
+# Registered queries that pin no scoped cache: registered without
+# scoped_caches, they return the lazy plan instead of paying
+# _finalize's parquet write and re-read, so running that plan must not
+# leave a cached block behind either.
+UNSCOPED_SAMPLE = [
+    "eval_substring_decontam",
+    "eval_substring_decontam_persisted",
+]
+
+
+@pytest.mark.parametrize("name", UNSCOPED_SAMPLE)
+def test_unscoped_query_leaves_no_pinned_blocks(spark, name):
+    from bearysta_spark.cachescope import release_scoped_caches
+
+    assert QUERIES[name] is RAW_QUERIES[name]  # no finalizing wrapper
+    spark.catalog.clearCache()
+    release_scoped_caches()
+    before = _persistent_rdd_ids(spark)
+    df = QUERIES[name](spark, SF)
+    df.write.format("noop").mode("overwrite").save()
+    leaked = _persistent_rdd_ids(spark) - before
+    assert not leaked, f"{name} left pinned RDDs {leaked} after running"
+
+
+def test_eval_substring_decontam_builds_without_jobs(spark, jobs_during):
+    # no count barrier while the plan is built, and no finalize write:
+    # the only job is the one every spark.read.parquet runs to read the
+    # footer schema, and the returned frame scans the corpus, not a
+    # mat_* scratch directory
+    from bearysta_spark.tables import load_table
+
+    read = jobs_during(lambda: load_table(spark, SF, "documents"))
+    built = []
+    build = jobs_during(
+        lambda: built.append(QUERIES["eval_substring_decontam"](spark, SF))
+    )
+    assert build == read
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        built[0].explain("formatted")
+    p = buf.getvalue()
+    assert "documents.parquet" in p
+    assert "mat_" not in p
 
 
 def test_image_increment_reads_index_not_corpus(spark):

@@ -519,3 +519,24 @@ def test_clf_train_memo_semantics(spark, sf_dir):
     assert h2 is h1  # memo read returns the published object
     h3 = Q._clf_train_history(spark, sf_dir, use_memo=False)
     assert h3 is not h1 and h3 == h1  # recomputed, deterministic
+
+
+def test_clf_train_memo_misses_after_the_corpus_is_rewritten(spark, sf_dir, tmp_path):
+    """The memo key carries the corpus files' path, size and mtime_ns:
+    a documents.parquet rewritten in place under the same sf_dir must
+    retrain, not serve the history of the old corpus."""
+    import pyarrow.parquet as pq
+
+    from bearysta_spark import queries as Q
+
+    path = tmp_path / "documents.parquet"
+    table = pq.read_table(f"{sf_dir}/documents.parquet")
+    pq.write_table(table, path)
+    Q._CLF_TRAIN_MEMO.clear()
+    h1 = Q._clf_train_history(spark, str(tmp_path))
+    assert Q._clf_train_history(spark, str(tmp_path)) is h1  # same corpus: hit
+    pq.write_table(table.slice(0, table.num_rows // 2), path)
+    h2 = Q._clf_train_history(spark, str(tmp_path))
+    assert h2 is not h1
+    assert len(Q._CLF_TRAIN_MEMO) == 2
+    Q._CLF_TRAIN_MEMO.clear()
