@@ -10,14 +10,19 @@ long-lived multi-query session accumulates pinned storage (r05 VERDICT
 finding #3).
 
 The fix is an explicit scope: library code registers every cache it
-creates via ``scoped_cache`` and the registered query wrappers
-(queries._finalize) release the whole scope after the query's terminal
-action. Contract: a registered query is a ONE-SHOT report — its helper
-returns a materialized result and leaves no pinned block behind
-(asserted by tests/test_plans.py against getPersistentRDDs). Library
-functions called directly still cache lazily for plan-reuse speed;
-callers embedding them in a long-lived session call
-``release_scoped_caches()`` themselves after their terminal action.
+creates via ``scoped_cache``, and every registered query builds its
+plan inside a scope (queries.query). A build whose scope captured at
+least one cache is finalized — its result materialized, then exactly
+those caches released (queries._finalize); a build that captured none
+returns its lazy plan. Contract: a registered query is a ONE-SHOT
+report that leaves no pinned block behind (asserted by
+tests/test_plans.py against getPersistentRDDs). The scope sees only
+caches made through ``scoped_cache``, so the packages under it never
+call a bare ``.cache()``/``.persist()`` (tests/test_local_frames.py
+scans for one). Library functions called directly still cache lazily
+for plan-reuse speed; callers embedding them in a long-lived session
+call ``release_scoped_caches()`` themselves after their terminal
+action.
 
 Scoping (r06 ADVICE): registration is token-scoped, not one global
 list. ``cache_scope()`` is a context manager that captures every cache
@@ -57,6 +62,10 @@ class CacheScope:
 
     def _add(self, df: DataFrame) -> None:
         self._dfs.append(df)
+
+    def __len__(self) -> int:
+        """How many captured caches are not yet released."""
+        return len(self._dfs)
 
     def release(self) -> int:
         """Unpersist every cache this scope captured; returns how many.

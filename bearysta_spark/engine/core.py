@@ -43,7 +43,7 @@ from bearysta_spark.engine.expr import (
 from bearysta_spark.engine.recipe import Recipe, RecipeError
 from bearysta_spark.engine.sources import scan
 from bearysta_spark.operators import filter_in, filter_out, pack, unpack
-from bearysta_spark.operators.aggregate import AGG_FUNCS, agg_expr
+from bearysta_spark.operators.aggregate import AGG_FUNCS, group_agg
 from bearysta_spark.operators.expected import expected_fill, ordering_check
 from bearysta_spark.operators import ratio as ratio_ops
 from bearysta_spark.session import local_frame
@@ -463,14 +463,10 @@ class RecipeEngine:
                 )
 
         dims = r.series + r.axis + r.variants
-        agg = r.aggregation
-        if agg not in AGG_FUNCS:
-            raise RecipeError(f"Unknown aggregation {agg!r}")
+        if r.aggregation not in AGG_FUNCS:
+            raise RecipeError(f"Unknown aggregation {r.aggregation!r}")
         values = [v for v in r.values if v in df.columns]
         others = [c for c in df.columns if c not in dims and c not in values]
-        aggs = [agg_expr(agg, v, v) for v in values] + [
-            F.first(qcol(c), ignorenulls=True).alias(c) for c in others
-        ]
         if self.diagnostics and others:
             # A5 (reference aggregate.py:723-726): log distinct counts of
             # columns being aggregated out. approx_count_distinct — at
@@ -482,9 +478,9 @@ class RecipeEngine:
                 logger.debug(
                     'Aggregated out column "%s" with ~%d unique values', c, row[c]
                 )
-        out = df.groupBy(*dims).agg(*aggs)
+        out = group_agg(df, dims, values, r.aggregation)
         keep = [c for c in out.columns if not c.startswith("_")]
-        return out.select(*keep)
+        return out.select(*[qcol(c) for c in keep])
 
     def check_ordering(self, df: DataFrame) -> list[dict]:
         r = self.recipe

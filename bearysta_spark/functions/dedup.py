@@ -1155,8 +1155,7 @@ def lsh_banding_curve(
     sample too. (A prefix-filtered truth was tried and reverted: at
     t=0.5 the prefix is ~half of every doc's shingles, so the pruning
     pays more in window+DF passes than it saves — measured slower
-    than all-pairs at the registered scale.) Callers registering this
-    must use scoped_caches=True."""
+    than all-pairs at the registered scale.)"""
     bad = [b for b in bands_list if num_hashes % b]
     if bad:
         raise ValueError(

@@ -1977,8 +1977,7 @@ def imi_pq_topk_refined(
     rows per query. Output: (qid, nid, sim, rank), ties by nid asc.
     The |Q|·refine-row shortlist is scope-cached — it feeds both the
     vector-fetch semi-join and the rerank join, and recomputing the
-    whole ADC stage per consumer would double stage-1 cost (callers
-    registering this must use scoped_caches=True). Pass `shortlist`
+    whole ADC stage per consumer would double stage-1 cost. Pass `shortlist`
     ((qid, nid) rows, e.g. an already-cached k=refine search) to skip
     stage 1 entirely — the recall audit reranks the same frame its
     ceiling row reads, so the two cannot drift."""
@@ -2049,8 +2048,7 @@ def imi_pq_operating_curve(
     raw-vector fetch + one rerank window + one truth join for ALL
     (probes, refine) cells; truth is |Q|·N brute force (an audit, run
     on samples at 100 TB); raw full-width rows are touched for
-    ~max(refine)·|Q| rows per probes value total. Callers registering
-    this must use scoped_caches=True.
+    ~max(refine)·|Q| rows per probes value total.
 
     ASSUMPTION (r11 ADVICE): `queries` is a SUBSET of `vectors` — the
     scanned_ppm denominator is |Q|·(N−1), matching the qid != nid

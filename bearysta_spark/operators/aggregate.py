@@ -16,7 +16,6 @@ so at 100 TB prefer `percentile_approx` (exposed as `median_approx`).
 from __future__ import annotations
 
 import logging
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
@@ -35,7 +34,7 @@ def _geomean(col: Column) -> Column:
 # on partial-aggregate order, so repeated runs (or different partition
 # counts) can differ in the last ulp. Accumulating in DECIMAL(25,10) makes
 # sum/mean deterministic — used for oracle-compared results and any recipe
-# that opts into `exact` aggregation.
+# that names `sum_exact` or `mean_exact` as its aggregation.
 _DEC = "decimal(25,10)"
 
 
@@ -65,8 +64,6 @@ AGG_FUNCS: dict[str, object] = {
     "mean_exact": _mean_exact,
 }
 
-_EXACT_ALIASES = {"mean": "mean_exact", "avg": "mean_exact", "sum": "sum_exact"}
-
 
 def agg_expr(func: str, col: str | Column, alias: str | None = None) -> Column:
     """Resolve an aggregation-function name (recipe `aggregation:` key)
@@ -75,19 +72,16 @@ def agg_expr(func: str, col: str | Column, alias: str | None = None) -> Column:
 
     Scale guard: exact `median` cannot partial-aggregate — every row of a
     group ships to one reducer, the one recipe aggregation that degrades
-    superlinearly at corpus scale. Set BEARYSTA_SPARK_MEDIAN=approx to
-    swap every recipe `median` for percentile_approx (t-digest, map-side
-    combinable); the default stays exact because the DuckDB oracle and
-    the reference's pandas median are exact."""
+    superlinearly at corpus scale, so its first use logs a warning
+    pointing at `median_approx` (percentile_approx: t-digest, map-side
+    combinable). `median` stays exact because the DuckDB oracle and the
+    reference's pandas median are exact."""
     if func not in AGG_FUNCS:
         raise ValueError(
             f"unknown aggregation {func!r}; available: {sorted(AGG_FUNCS)}"
         )
     if func == "median":
-        if os.environ.get("BEARYSTA_SPARK_MEDIAN", "exact") == "approx":
-            func = "median_approx"
-        else:
-            _warn_exact_median()
+        _warn_exact_median()
     c = qcol(col)
     out = AGG_FUNCS[func](c)
     return out.alias(alias) if alias else out
@@ -101,7 +95,7 @@ def _warn_exact_median() -> None:
     if not _median_warned:
         logging.getLogger("bearysta_spark.operators").warning(
             "exact median cannot partial-aggregate (all rows per group "
-            "shuffle to one reducer); set BEARYSTA_SPARK_MEDIAN=approx "
+            "shuffle to one reducer); use the `median_approx` aggregation "
             "for the t-digest percentile_approx at scale"
         )
         _median_warned = True
@@ -113,7 +107,6 @@ def group_agg(
     values: Sequence[str],
     func: str,
     keep_others: bool = True,
-    exact: bool = False,
 ) -> DataFrame:
     """Main recipe aggregation (A1): groupBy(series+axis+variants),
     recipe agg on `values`, `first` on every other column.
@@ -123,8 +116,6 @@ def group_agg(
     groupby('first').
     """
     dims = [d for d in dims if d in df.columns]
-    if exact:
-        func = _EXACT_ALIASES.get(func, func)
     aggs = [agg_expr(func, v, v) for v in values]
     if keep_others:
         others = [c for c in df.columns if c not in dims and c not in values]
@@ -158,7 +149,9 @@ def pivot_table(
     distinct-values job — important at scale where the distinct is a
     full shuffle of its own.
     """
-    g = df.withColumn("__pivot_key", pivot_key(columns)).groupBy(*index)
+    g = df.withColumn("__pivot_key", pivot_key(columns)).groupBy(
+        *[qcol(c) for c in index]
+    )
     p = g.pivot("__pivot_key", list(column_values) if column_values else None)
     if len(values) == 1:
         return p.agg(agg_expr(func, values[0]))

@@ -44,9 +44,9 @@ def expected_fill(
     # column types as createDataFrame infers them from the Python values
     exp_df = local_frame(spark, rows, spark._inferSchemaFromList(rows, names=series))  # noqa: SLF001
 
-    groups = df.select(*keys).distinct() if keys else spark.range(1).select()
+    groups = df.select(*[qcol(k) for k in keys]).distinct() if keys else spark.range(1).select()
     wanted = groups.crossJoin(F.broadcast(exp_df)) if keys else exp_df
-    present = df.select(*keys, *series).distinct()
+    present = df.select(*[qcol(c) for c in [*keys, *series]]).distinct()
     missing = wanted.join(present, [*keys, *series], "left_anti")
 
     fill = missing.select(
@@ -72,7 +72,9 @@ def ordering_check(
     (axis+variants) group whose series ordering by agg(value) does not
     match `expected_order` (restricted to present members)."""
     keys = [*axis, *variants]
-    agged = df.groupBy(*keys, series).agg(agg_expr(agg, value, "__v"))
+    agged = df.groupBy(*[qcol(c) for c in [*keys, series]]).agg(
+        agg_expr(agg, value, "__v")
+    )
     rows = agged.collect()
 
     by_group: dict[tuple, list] = {}

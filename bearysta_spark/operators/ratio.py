@@ -73,8 +73,12 @@ def ratio_of(
     if check_base and base_slice.isEmpty():
         raise MissingBaseError(f"no rows match ratio base {dict(base)!r}")
 
-    base_agg = base_slice.groupBy(*keys).agg(agg_expr(agg, value, "__base"))
-    grp_agg = df.groupBy(*keys, *series).agg(agg_expr(agg, value, "__agg"))
+    base_agg = base_slice.groupBy(*[qcol(k) for k in keys]).agg(
+        agg_expr(agg, value, "__base")
+    )
+    grp_agg = df.groupBy(*[qcol(k) for k in [*keys, *series]]).agg(
+        agg_expr(agg, value, "__agg")
+    )
 
     joined = (
         grp_agg.join(F.broadcast(base_agg), keys, "left")

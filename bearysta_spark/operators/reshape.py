@@ -18,7 +18,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bearysta_spark.colnames import qcol
+from bearysta_spark.colnames import qcol, qname
 
 
 def pack(
@@ -63,6 +63,6 @@ def unpack(
     per group of all remaining columns."""
     others = [c for c in df.columns if c not in (name, value)]
     p = df.groupBy(*[qcol(c) for c in others]).pivot(
-        name, list(column_values) if column_values else None
+        qname(name), list(column_values) if column_values else None
     )
     return p.agg(F.first(qcol(value), ignorenulls=True))

@@ -13,12 +13,13 @@ beyond-reference extension). Conventions for oracle hash-parity:
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from bearysta_spark.cachescope import scoped_cache
+from bearysta_spark.cachescope import CacheScope, cache_scope, scoped_cache
 from bearysta_spark.functions import dedup as D
 from bearysta_spark.functions import similarity as S
 from bearysta_spark.functions import sketch as K
@@ -103,58 +104,50 @@ _IVF_CENTROIDS = _make_ivf_centroids()
 _PQ_CODEBOOKS = S.make_pq_codebooks(dim=64, m=8, ksub=8, seed=11)
 
 
-def _finalize(df: DataFrame, scope=None) -> DataFrame:
-    """Terminal action for a cache-scoped query: materialize the result
-    DISTRIBUTED — a parquet write to scratch storage (scratch.
-    materialize_distributed) — then release every scope-registered
-    cache and hand back a scan of the materialized result with the
-    identical schema. This keeps the one-shot contract real (no pinned
-    block survives the helper's return, r05 VERDICT finding #3)
+def _finalize(df: DataFrame, scope: CacheScope) -> DataFrame:
+    """Terminal action for a query whose build pinned caches:
+    materialize the result DISTRIBUTED — a parquet write to scratch
+    storage (scratch.materialize_distributed) — then release the caches
+    `scope` captured and hand back a scan of the materialized result
+    with the identical schema. This keeps the one-shot contract real (no
+    pinned block survives the helper's return, r05 VERDICT finding #3)
     without funnelling the result through the driver: pair-emitting
     queries (near_dup_pairs, image_phash_pairs, ...) have
     corpus-proportional output, and the r06 VERDICT graded the previous
     collect()-based finalizer weak-at-100× for exactly that reason.
     The write is executor-side and the returned frame stays a
     distributed parquet scan."""
-    from bearysta_spark.cachescope import release_scoped_caches
     from bearysta_spark.scratch import materialize_distributed
 
     out = materialize_distributed(df, "result")
-    if scope is not None:
-        scope.release()
-    else:
-        release_scoped_caches()
+    scope.release()
     return out
 
 
 #: Raw (lazy) query callables, always registered — plan tests inspect
-#: these; QUERIES holds the finalizing wrapper for cache-scoped queries.
+#: these; QUERIES holds the registered form built by `query`.
 RAW_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 
 
-def query(name: str, oracle: str | None = None, scoped_caches: bool = False):
-    """Register a query. scoped_caches=True marks helpers that pin
-    caches (directly or via library calls) — their registered form
-    opens a CacheScope around plan construction AND the terminal
-    action, so exactly the caches this query registered are released at
-    return (r06 ADVICE: a process-global release could steal caches a
-    concurrent library caller had built but not yet executed)."""
+def query(name: str, oracle: str | None = None):
+    """Register a query. Its registered form builds the plan inside a
+    CacheScope, which captures every `scoped_cache` the build pins,
+    directly or through library calls. A build that pinned one or more
+    caches is finalized (`_finalize`), which releases exactly those
+    caches at return (r06 ADVICE: a process-global release could steal
+    caches a concurrent library caller had built but not yet executed);
+    a build that pinned none returns its lazy plan untouched."""
 
     def deco(fn):
         RAW_QUERIES[name] = fn
-        if scoped_caches:
-            def _wrapped(spark: SparkSession, sf_dir: str, _fn=fn) -> DataFrame:
-                from bearysta_spark.cachescope import cache_scope
 
-                with cache_scope() as scope:
-                    df = _fn(spark, sf_dir)
-                    return _finalize(df, scope)
+        @functools.wraps(fn)
+        def registered(spark: SparkSession, sf_dir: str) -> DataFrame:
+            with cache_scope() as scope:
+                df = fn(spark, sf_dir)
+                return _finalize(df, scope) if len(scope) else df
 
-            _wrapped.__name__ = fn.__name__
-            _wrapped.__doc__ = fn.__doc__
-            QUERIES[name] = _wrapped
-        else:
-            QUERIES[name] = fn
+        QUERIES[name] = registered
         if oracle is not None:
             ORACLE[name] = oracle
         return fn
@@ -1386,9 +1379,8 @@ def agg_mean_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
         li,
         ["l_returnflag", "l_linestatus"],
         ["l_quantity", "l_extendedprice"],
-        "mean",
+        "mean_exact",
         keep_others=False,
-        exact=True,
     )
     return out.select(
         "l_returnflag",
@@ -1580,7 +1572,6 @@ def percent_diff_base(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "expected_fill_combos",
-    scoped_caches=True,
     oracle="""
     WITH agg AS (
       SELECT l_returnflag, l_linestatus, CAST(count(*) AS BIGINT) AS n
@@ -2854,7 +2845,6 @@ def cdc_chunk_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "bloom_decontam",
-    scoped_caches=True,
     oracle="""
     WITH arrs AS (
       SELECT doc_id, source, regexp_extract_all(text, '[a-z0-9]+') AS a
@@ -4056,7 +4046,6 @@ def minhash_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "near_dup_pairs",
-    scoped_caches=True,
     oracle=f"""
     WITH {_SH_CTE}, {_CAND_CTE},
     sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
@@ -4088,7 +4077,6 @@ def near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "jaccard_band_histogram",
-    scoped_caches=True,
     oracle=f"""
     WITH {_SH_CTE}, {_CAND_CTE},
     sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
@@ -4194,7 +4182,6 @@ _CMS_BUCKET_SQL = (
 
 @query(
     "cms_heavy_hitters",
-    scoped_caches=True,
     oracle=f"""
     WITH exact AS (
       SELECT user_id, CAST(user_id AS VARCHAR) AS us, count(*) AS n
@@ -4340,7 +4327,6 @@ def dedup_increment_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_clusters",
-    scoped_caches=True,
     oracle=f"""
     WITH RECURSIVE {_SH_CTE}, {_CAND_CTE}, {_CLUSTER_CTES}
     SELECT CAST(doc AS BIGINT) AS doc_id, CAST(min(r) AS BIGINT) AS component
@@ -4367,7 +4353,6 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_clusters_star",
-    scoped_caches=True,
     oracle=f"""
     WITH RECURSIVE {_SH_CTE}, {_CAND_CTE}, {_CLUSTER_CTES}
     SELECT CAST(doc AS BIGINT) AS doc_id, CAST(min(r) AS BIGINT) AS component
@@ -4394,7 +4379,6 @@ def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_canonical_corpus",
-    scoped_caches=True,
     oracle=f"""
     WITH RECURSIVE {_SH_CTE}, {_CAND_CTE}, {_CLUSTER_CTES},
     comp AS (
@@ -4436,7 +4420,6 @@ def dedup_canonical_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_canonical_by_quality",
-    scoped_caches=True,
     oracle=f"""
     WITH RECURSIVE {_SH_CTE}, {_CAND_CTE}, {_CLUSTER_CTES},
     comp AS (
@@ -4518,7 +4501,6 @@ def dedup_canonical_by_quality(
 
 @query(
     "simhash_pairs",
-    scoped_caches=True,
     oracle="""
     WITH toks AS (
       SELECT doc_id,
@@ -5030,7 +5012,6 @@ def token_commonness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "unigram_surprise",
-    scoped_caches=True,
     oracle="""
     WITH toks AS (
       SELECT doc_id, unnest(regexp_extract_all(text, '[a-z0-9]+')) AS tok
@@ -5110,7 +5091,6 @@ def unigram_surprise(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "source_tv_divergence",
-    scoped_caches=True,
     oracle="""
     WITH toks AS (
       SELECT source, unnest(regexp_extract_all(text, '[a-z0-9]+')) AS tok
@@ -5439,7 +5419,6 @@ def join_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "prefix_jaccard_pairs",
-    scoped_caches=True,
     oracle="""
     WITH words AS (
       SELECT doc_id, regexp_extract_all(text, '[a-z0-9]+') AS w FROM documents
@@ -5825,7 +5804,6 @@ def snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "user_cohort_retention",
-    scoped_caches=True,
     oracle="""
     WITH firstwk AS (
       SELECT user_id, min(date_trunc('week', ts)) AS cohort
@@ -5904,7 +5882,6 @@ def user_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "token_lift_pairs",
-    scoped_caches=True,
     oracle="""
     WITH toks AS (
       SELECT doc_id, regexp_extract_all(text, '[a-z0-9]+') AS w FROM documents
@@ -6308,7 +6285,6 @@ _BM25_TERMS = ("spark", "window", "hash", "stream")
 
 @query(
     "bm25_keyword_topk",
-    scoped_caches=True,
     oracle=f"""
     WITH toks AS (
       SELECT doc_id, unnest(regexp_extract_all(text, '[a-z0-9]+')) AS tok
@@ -6447,7 +6423,6 @@ def _leak_split_case() -> str:
 
 @query(
     "split_leakage_check",
-    scoped_caches=True,
     oracle=f"""
     WITH split AS (
       SELECT doc_id, source, text, {_leak_split_case()} AS split
@@ -6508,7 +6483,6 @@ def split_leakage_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_cluster_purity",
-    scoped_caches=True,
     oracle=f"""
     WITH RECURSIVE {_SH_CTE}, {_CAND_CTE}, {_CLUSTER_CTES},
     comp AS (
@@ -6826,7 +6800,6 @@ def _imipq_scored_ctes(refine: int) -> str:
 
 @query(
     "imi_pq_refine_recall",
-    scoped_caches=True,
     oracle=f"""
     WITH {_imi_rank_ctes()},
     {_imipq_scored_ctes(15)},
@@ -6949,7 +6922,6 @@ def imi_pq_refine_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "knn_imi_pq_refined",
-    scoped_caches=True,
     oracle=f"""
     WITH {_imi_rank_ctes()},
     {_imipq_scored_ctes(15)}
@@ -7116,7 +7088,6 @@ _CURVE_REFINE = (5, 15, 30)
 
 @query(
     "imi_pq_operating_curve",
-    scoped_caches=True,
     oracle=_imipq_curve_oracle_sql(_CURVE_PROBES, _CURVE_REFINE, 5),
 )
 def imi_pq_operating_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7526,7 +7497,6 @@ def _residual_recall_oracle_sql(
 
 @query(
     "imi_pq_residual_recall",
-    scoped_caches=True,
     oracle=_residual_recall_oracle_sql(),
 )
 def imi_pq_residual_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7748,7 +7718,6 @@ _CLUSTERED_SPREAD = 0.15  # between-var share ~0.35 — the numpy
 
 @query(
     "imi_pq_residual_recall_clustered",
-    scoped_caches=True,
     oracle=_residual_recall_oracle_sql(
         e_sql=_clustered_e_sql(_CLUSTERED_SPREAD), coarse_exact=True
     ),
@@ -7788,7 +7757,6 @@ def imi_pq_residual_recall_clustered(
 
 @query(
     "imi_pq_opq_recall",
-    scoped_caches=True,
     oracle=_residual_recall_oracle_sql(
         e_sql=_clustered_e_sql(_CLUSTERED_SPREAD), opq=True
     ),
@@ -7893,7 +7861,7 @@ def knn_imi_pq_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE["knn_imi_pq_streamed"] = ORACLE["knn_imi_pq_persisted"]
 
 
-@query("knn_imi_pq_refined_streamed", scoped_caches=True)
+@query("knn_imi_pq_refined_streamed")
 def knn_imi_pq_refined_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-stage refined search against a STREAM-GROWN index (r10
     verdict ask #4): before this, live serving was ADC-only while the
@@ -8063,7 +8031,6 @@ ORACLE["hll_weekly_rollup"] = (
 
 @query(
     "dedup_method_agreement",
-    scoped_caches=True,
     oracle=f"""
     WITH RECURSIVE {_SH_CTE}, {_CAND_CTE}, {_CLUSTER_CTES},
     fz_k AS (
@@ -8169,7 +8136,6 @@ def _hll_est_expr(prefix: str) -> str:
 
 @query(
     "hll_audience_overlap",
-    scoped_caches=True,
     oracle=f"""
     WITH r AS (
       SELECT event_type,
@@ -8304,7 +8270,6 @@ def hll_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "hll_overlap_sketch",
-    scoped_caches=True,
     oracle=f"""
     WITH r AS (
       SELECT event_type,
@@ -8413,7 +8378,6 @@ def hll_overlap_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sketch_method_agreement",
-    scoped_caches=True,
     oracle=f"""
     WITH {_SH_CTE}, {_CAND_CTE},
     toks AS (
@@ -9599,7 +9563,6 @@ def _phash_pairs_sql(p: str = "") -> str:
 
 @query(
     "image_phash_pairs",
-    scoped_caches=True,
     oracle=f"""
     WITH {_phash_keys_sql()},
     {_phash_pairs_sql()}
@@ -9645,7 +9608,6 @@ def image_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "image_phash_increment_persisted",
-    scoped_caches=True,
     oracle=f"""
     WITH {_phash_keys_sql()},
     cand AS (
@@ -9780,7 +9742,6 @@ def media_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "video_frame_dedup",
-    scoped_caches=True,
     oracle=f"""
     WITH t AS (SELECT doc_id, lower(text) AS t FROM documents),
     cells AS (
@@ -9846,7 +9807,6 @@ def video_frame_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "knn_sparse_text",
-    scoped_caches=True,
     oracle="""
     WITH occ AS (
       SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS word
@@ -9950,7 +9910,6 @@ _SPARSE_RECALL_K = 10
 
 @query(
     "sparse_knn_recall",
-    scoped_caches=True,
     oracle="""
     WITH occ AS (
       SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+'))
@@ -10377,7 +10336,6 @@ sc3 AS (
 
 @query(
     "bigram_backoff_surprise",
-    scoped_caches=True,
     oracle=f"""
 WITH {_LM_SC_CTES}
 SELECT p.doc_id, d.source, p.n_bigrams, p.n_backoff, p.n_oov,
@@ -10509,8 +10467,8 @@ def _bigram_lm_scored(d: DataFrame) -> tuple[DataFrame, DataFrame]:
     scores. Returns (scored, base): scored is (doc_id, s, bo, ov) at
     held-bigram grain; base is the scoped-cached split+tokenized
     corpus frame (doc_id, source, split, ws) for metadata reuse.
-    Both base and the unigram table are scoped-cached — callers must
-    be registered scoped_caches=True. Caching base buys the single
+    Both base and the unigram table are scoped-cached (a registered
+    caller is finalized, which releases them). Caching base buys the single
     corpus scan (uncached, the train side is read twice for the
     unigram/bigram tables, the held side once, and the source join
     once more — 4 scans measured); at 100 TB the cache spills to
@@ -10565,7 +10523,7 @@ def _trigram_lm_scored(d: DataFrame) -> tuple[DataFrame, DataFrame]:
     _lm_count_tables — BYTE-IDENTICAL to the bigram model's, which is
     what makes the two orders comparable on the same held set.
     Returns (scored, base); scored is (doc_id, s, bo1, bo2, ov) at
-    held-trigram grain. Caller must register scoped_caches=True.
+    held-trigram grain.
     100 TB shape: like the bigram scorer plus one more shuffle
     equi-join — the trigram table joins on (w1, w2, w3); the two
     bigram lookups reuse ONE c2 table (denominator and backoff
@@ -10746,7 +10704,6 @@ def _funnel_eval_thr() -> str:
 
 @query(
     "pretrain_funnel_report",
-    scoped_caches=True,
     oracle=f"""
 WITH {_SH_CTE}, {_CAND_CTE},
 vsz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
@@ -11000,7 +10957,6 @@ def pretrain_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "multimodal_dedup_agreement",
-    scoped_caches=True,
     oracle=f"""
     WITH {_SH_CTE}, {_CAND_CTE},
     sz AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
@@ -11081,7 +11037,6 @@ def multimodal_dedup_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "audio_fp_stats",
-    scoped_caches=True,
     oracle=f"""
     WITH t AS (SELECT doc_id, lower(text) AS t FROM documents),
     aw AS (
@@ -11157,7 +11112,6 @@ def audio_fp_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "audio_landmark_recall",
-    scoped_caches=True,
     oracle="""
 WITH base AS (
   SELECT doc_id, lower(text) AS t FROM documents WHERE length(lower(text)) >= 16
@@ -11447,7 +11401,6 @@ def _cont_split_case() -> str:
 
 @query(
     "eval_containment_report",
-    scoped_caches=True,
     oracle=f"""
     WITH split AS (
       SELECT doc_id, {_cont_split_case()} AS s FROM documents
@@ -11904,7 +11857,6 @@ top{n} AS (
 
 @query(
     "gopher_repetition_report",
-    scoped_caches=True,
     oracle=f"""
     WITH {_REP_DOCS_CTE},
     {_rep_topgram_cte(2)},
@@ -12193,8 +12145,8 @@ def _ppl_bucket_report(scored: DataFrame, ngrams_col: str) -> DataFrame:
     # chain (held-side explode + 4-5 count-table joins + the per-doc
     # aggregate) executed twice per report. The cached frame is
     # doc-grain (4 narrow columns), orders of magnitude smaller than
-    # the scored n-gram stream it summarizes. Callers are registered
-    # scoped_caches=True, so the pin is released at query end.
+    # the scored n-gram stream it summarizes. The pin makes a registered
+    # caller finalize, which releases it at query end.
     keyed = scoped_cache(
         perdoc.select(
             "doc_id",
@@ -12259,7 +12211,6 @@ def _ppl_bucket_report(scored: DataFrame, ngrams_col: str) -> DataFrame:
 
 @query(
     "lm_perplexity_buckets",
-    scoped_caches=True,
     oracle=f"""
 WITH {_LM_SC_CTES}{_ppl_bucket_tail_sql("sc", "n_bigrams")}
 """,
@@ -12300,7 +12251,6 @@ def lm_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "trigram_backoff_surprise",
-    scoped_caches=True,
     oracle=f"""
 WITH {_LM3_SC_CTES}
 SELECT p.doc_id, d.source, p.n_trigrams, p.n_backoff_bi, p.n_backoff_uni,
@@ -12365,7 +12315,6 @@ def trigram_backoff_surprise(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "trigram_perplexity_buckets",
-    scoped_caches=True,
     oracle=f"""
 WITH {_LM3_SC_CTES}{_ppl_bucket_tail_sql("sc3", "n_trigrams")}
 """,
@@ -12769,7 +12718,7 @@ _CHURN_ORACLE = f"""
     """
 
 
-@query("corpus_churn_report", scoped_caches=True, oracle=_CHURN_ORACLE)
+@query("corpus_churn_report", oracle=_CHURN_ORACLE)
 def corpus_churn_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental-crawl churn audit — the question a pipeline owner
     asks before paying to process a new crawl: how much of today's
@@ -12802,7 +12751,7 @@ def corpus_churn_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("corpus_churn_persisted", scoped_caches=True, oracle=_CHURN_ORACLE)
+@query("corpus_churn_persisted", oracle=_CHURN_ORACLE)
 def corpus_churn_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The DAILY PRODUCTION form of corpus_churn_report: the standing
     corpus's LSH band buckets come from a PERSISTED write_lsh_index
@@ -12922,7 +12871,6 @@ _BANDING_CLAMP = 1000
 
 @query(
     "dedup_banding_curve",
-    scoped_caches=True,
     oracle=_banding_curve_oracle_sql(_BANDING_GRID, clamp=_BANDING_CLAMP),
 )
 def dedup_banding_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13016,7 +12964,6 @@ def corpus_drift_oracle_sql() -> str:
 
 @query(
     "corpus_drift_report",
-    scoped_caches=True,
     oracle=corpus_drift_oracle_sql(),
 )
 def corpus_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13124,8 +13071,7 @@ def _doremi_loss_rows(
     code-length model — one cached tokenization scan feeding the
     vocab-bounded count table and the per-domain surprisal sum (AQE
     picks the surprisal join from its measured size). Collected as
-    <= D bounded model rows for the exact-integer EG loop. Callers
-    must be registered scoped_caches=True."""
+    <= D bounded model rows for the exact-integer EG loop."""
     d = _t(spark, sf_dir, "documents")
     base = scoped_cache(
         d.select(
@@ -13162,7 +13108,6 @@ def _doremi_loss_rows(
 
 @query(
     "doremi_domain_weights",
-    scoped_caches=True,
     oracle=doremi_oracle_sql(),
 )
 def doremi_domain_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13237,7 +13182,6 @@ def doremi_sample_oracle_sql(rounds: int = _DOREMI_ROUNDS) -> str:
 
 @query(
     "doremi_trained_sample",
-    scoped_caches=True,
     oracle=doremi_sample_oracle_sql(),
 )
 def doremi_trained_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -13310,7 +13254,6 @@ def doremi_trained_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "doremi_plan_persisted_sample",
-    scoped_caches=True,
     oracle=doremi_sample_oracle_sql(),
 )
 def doremi_plan_persisted_sample(
@@ -13387,7 +13330,6 @@ def doremi_plan_persisted_sample(
 
 @query(
     "cluster_balanced_sample",
-    scoped_caches=True,
     oracle=f"""
     WITH cm0(cell, c) AS (VALUES
       {_KM_CM0}),
@@ -13535,7 +13477,6 @@ def _dsir_split_sql() -> str:
 
 @query(
     "dsir_importance_select",
-    scoped_caches=True,
     oracle=f"""
     WITH base AS (
       SELECT doc_id, source, {_dsir_split_sql()} AS split,
@@ -13696,7 +13637,6 @@ v{n} AS (SELECT dim, w / nm AS vv FROM w{n} CROSS JOIN nm{n})"""
 
 @query(
     "pca_top_component",
-    scoped_caches=True,
     oracle=f"""
     WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
                FROM embeddings),
@@ -13763,8 +13703,7 @@ def _pca_fit(e: DataFrame) -> tuple[list[float], list[float], float]:
     """Shared power-iteration fit (the Spark twin of the _PCA_ITER
     oracle chain): returns (mu, v, nm) — the per-dim mean, the unit
     top principal component after 3 rounds, and its Rayleigh
-    eigenvalue estimate. Scoped-caches the long-form matrix — callers
-    must be registered scoped_caches=True. Model state is 64-row
+    eigenvalue estimate. Scoped-caches the long-form matrix. Model state is 64-row
     collects per round (bounded, the bpe_train argmax argument)."""
     n_dim = 64
     x = scoped_cache(
@@ -13848,7 +13787,6 @@ def _pca_fit(e: DataFrame) -> tuple[list[float], list[float], float]:
 
 @query(
     "anisotropy_abtt_report",
-    scoped_caches=True,
     oracle=f"""
     WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
                FROM embeddings),
@@ -14123,7 +14061,6 @@ def _tok_agreement_oracle() -> str:
 
 @query(
     "tokenizer_fertility_agreement",
-    scoped_caches=True,
     oracle=_tok_agreement_oracle(),
 )
 def tokenizer_fertility_agreement(

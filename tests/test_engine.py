@@ -471,6 +471,53 @@ def test_sqlite_rejects_hostile_table_name(spark, tmp_path):
         scan_sqlite(spark, [db_path], "t; DROP TABLE t--")
 
 
+def test_dotted_dimension_names(spark, tmp_path, caplog):
+    # series, axis, variant and value columns all carry dots: every
+    # reference to them must be a quoted name, not a struct path
+    write(
+        tmp_path / "d.csv",
+        "Algo.name,n.rows,Arch.id,Time.s\n"
+        "ref,1000,icx,2.0\nfast,1000,icx,1.0\n"
+        "ref,2000,icx,4.0\nfast,2000,icx,1.0\n"
+        "ref,1000,spr,1.0\nfast,1000,spr,2.0\n",
+    )
+    recipe = {
+        "input": {"path": str(tmp_path / "d.csv"), "format": "csv"},
+        # a ratio base is a keyword argument, so it names an identifier
+        # column; the ratio still groups by the dotted dimensions
+        "precomputed": {
+            "Ref": "row['Algo.name']",
+            "Speedup": "ratio_of('Time.s', Ref='ref')",
+        },
+        "aggregation": "mean",
+        "series": ["Algo.name"],
+        "axis": ["n.rows"],
+        "variants": ["Arch.id"],
+        "values": ["Time.s", "Speedup"],
+        "expected": ["fast", "ref", "slow"],
+    }
+    eng = RecipeEngine(spark, recipe)
+    with caplog.at_level("WARNING"):
+        out = eng.aggregated()
+    rows = {(r["Algo.name"], r["n.rows"], r["Arch.id"]): r for r in out.collect()}
+    assert rows[("fast", 1000, "icx")]["Time.s"] == 1.0
+    assert rows[("fast", 1000, "icx")]["Speedup"] == 0.5
+    assert rows[("fast", 2000, "icx")]["Speedup"] == 0.25
+    assert rows[("fast", 1000, "spr")]["Speedup"] == 2.0
+    # expected: one null row per (axis, variants) group missing `slow`
+    slow = {k[1:] for k, r in rows.items() if k[0] == "slow" and r["Time.s"] is None}
+    assert slow == {(1000, "icx"), (2000, "icx"), (1000, "spr")}
+    # ordering check: only spr runs ref faster than fast
+    flagged = [m for m in caplog.messages if "Unexpected performance ordering" in m]
+    assert flagged and all("'Arch.id': 'spr'" in m for m in flagged)
+
+    tables = eng.pivot_tables()
+    assert [t[0] for t in tables] == [("icx",), ("spr",)]
+    icx = {r["n.rows"]: r for r in tables[0][1].collect()}
+    assert icx[2000]["fast_Time.s"] == 1.0 and icx[2000]["ref_Speedup"] == 1.0
+    assert icx[2000]["slow_Time.s"] is None
+
+
 # ---------------------------------------------------------------------------
 # P5: general tuple merge-back (ref aggregate.py:500-506)
 # ---------------------------------------------------------------------------

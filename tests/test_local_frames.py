@@ -10,6 +10,7 @@ every frame the recipe engine builds on the driver.
 from __future__ import annotations
 
 import pathlib
+import re
 
 import pytest
 from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
@@ -125,5 +126,26 @@ def test_no_bare_create_dataframe_on_the_recipe_path():
         # recipe-named columns go through qcol
         or 'F.expr(f"' in line
         or 'selectExpr(f"' in line
+    ]
+    assert not offenders, offenders
+
+
+def test_no_bare_cache_outside_scoped_cache():
+    # a registered query finalizes exactly when its build registered a
+    # cache through scoped_cache; a bare .cache()/.persist() is invisible
+    # to that scope and would pin blocks past the query's return.
+    # (components.py's localCheckpoint is documented lineage truncation;
+    # the streaming foreachBatch persists free themselves per batch.)
+    bare = re.compile(r"\.cache\(\s*\)|\.persist\(")
+    files = [PACKAGE / "queries.py"] + [
+        path
+        for sub in ("functions", "operators", "engine")
+        for path in sorted((PACKAGE / sub).rglob("*.py"))
+    ]
+    offenders = [
+        f"{path.relative_to(PACKAGE)}:{i}"
+        for path in files
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if bare.search(line)
     ]
     assert not offenders, offenders

@@ -49,10 +49,9 @@ def test_ratio_of_base_is_one(spark, rows):
        nparts=st.integers(min_value=1, max_value=5))
 def test_exact_agg_partition_invariant(spark, rows, nparts):
     df = spark.createDataFrame(rows, ["k", "v"])
-    a = group_agg(df.repartition(1), ["k"], ["v"], "sum", keep_others=False,
-                  exact=True)
-    b = group_agg(df.repartition(nparts), ["k"], ["v"], "sum", keep_others=False,
-                  exact=True)
+    a = group_agg(df.repartition(1), ["k"], ["v"], "sum_exact", keep_others=False)
+    b = group_agg(df.repartition(nparts), ["k"], ["v"], "sum_exact",
+                  keep_others=False)
     ra = {r["k"]: r["v"] for r in a.collect()}
     rb = {r["k"]: r["v"] for r in b.collect()}
     assert ra == rb  # bit-identical regardless of partitioning

@@ -98,6 +98,15 @@ def test_unpack_null_keys_survive(spark):
     assert out.count() == 2
 
 
+def test_unpack_dotted_name(spark):
+    df = spark.createDataFrame(
+        [("a", "x.y", 1.0), ("a", "z", 2.0)], ["id.k", "k.name", "v.al"]
+    )
+    assert unpack(df, "k.name", "v.al").collect() == [
+        Row(**{"id.k": "a", "x.y": 1.0, "z": 2.0})
+    ]
+
+
 def test_pivot_table(perf):
     out = pivot_table(perf, ["Function"], ["Prefix"], ["Time"], "mean")
     d = {r["Function"]: r for r in out.collect()}
@@ -253,20 +262,6 @@ def test_asof_join_null_right_value_attaches_matched_row(spark):
     tol = asof_join(left, right, on="ts", by=["user"], right_cols=["v"],
                     tolerance_seconds=2 * 3600)
     assert [r["v"] for r in tol.collect()] == [None]
-
-
-def test_median_scale_guard_env_switch(spark, monkeypatch):
-    # BEARYSTA_SPARK_MEDIAN=approx swaps recipe medians for the
-    # map-side-combinable t-digest; default stays exact (oracle parity)
-    from bearysta_spark.operators.aggregate import agg_expr
-
-    df = spark.createDataFrame([(1.0,), (2.0,), (100.0,)], "v: double")
-    exact = df.agg(agg_expr("median", "v", "m")).collect()[0]["m"]
-    assert exact == pytest.approx(2.0)
-
-    monkeypatch.setenv("BEARYSTA_SPARK_MEDIAN", "approx")
-    approx = df.agg(agg_expr("median", "v", "m")).collect()[0]["m"]
-    assert approx == pytest.approx(2.0)  # t-digest exact on tiny input
 
 
 def test_banded_range_join_equals_naive(spark):

@@ -15,14 +15,18 @@ from bearysta_spark.queries import QUERIES, RAW_QUERIES
 SF = "/root/testdata/sf0.001"
 
 
-def plan_of(spark, name: str) -> str:
-    # RAW_QUERIES: the lazy pipeline (cache-scoped queries register a
-    # finalizing wrapper in QUERIES whose returned plan is a local scan)
-    df = RAW_QUERIES[name](spark, SF)
+def explained(df) -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def plan_of(spark, name: str) -> str:
+    # RAW_QUERIES: the lazy pipeline (the registered form in QUERIES of a
+    # query whose build pins a cache returns a scan of its materialized
+    # result instead)
+    return explained(RAW_QUERIES[name](spark, SF))
 
 
 def test_q1_filter_pushdown_and_pruning(spark):
@@ -403,10 +407,11 @@ def test_executed_plan_scan_budget(spark, name, table, budget):
         release_scoped_caches()
 
 
-# Every registered query that pins a cache (directly or via a library
-# call: LSH verify shingles, BM25 per-doc norms, Bloom bench grams, HLL
-# registers, ...). The dedup_clusters* family is excluded: connected
-# components localCheckpoints its frontier by design (documented
+# Registered queries whose build pins a scoped cache (directly or via a
+# library call: LSH verify shingles, BM25 per-doc norms, Bloom bench
+# grams, HLL registers, ...), so their registered form finalizes. The
+# dedup_clusters* family is excluded: connected components
+# localCheckpoints its frontier by design (documented
 # lineage-truncation, not a cache leak).
 CACHE_SCOPED_SAMPLE = [
     "expected_fill_combos",
@@ -439,10 +444,10 @@ CACHE_SCOPED_SAMPLE = [
 ]
 
 
-# Registered queries that pin no scoped cache: registered without
-# scoped_caches, they return the lazy plan instead of paying
-# _finalize's parquet write and re-read, so running that plan must not
-# leave a cached block behind either.
+# Registered queries whose build pins no scoped cache: their registered
+# form returns the lazy plan instead of paying _finalize's parquet write
+# and re-read, so running that plan must not leave a cached block
+# behind either.
 UNSCOPED_SAMPLE = [
     "eval_substring_decontam",
     "eval_substring_decontam_persisted",
@@ -453,11 +458,11 @@ UNSCOPED_SAMPLE = [
 def test_unscoped_query_leaves_no_pinned_blocks(spark, name):
     from bearysta_spark.cachescope import release_scoped_caches
 
-    assert QUERIES[name] is RAW_QUERIES[name]  # no finalizing wrapper
     spark.catalog.clearCache()
     release_scoped_caches()
     before = _persistent_rdd_ids(spark)
     df = QUERIES[name](spark, SF)
+    assert "mat_" not in explained(df)  # not finalized
     df.write.format("noop").mode("overwrite").save()
     leaked = _persistent_rdd_ids(spark) - before
     assert not leaked, f"{name} left pinned RDDs {leaked} after running"
@@ -476,10 +481,7 @@ def test_eval_substring_decontam_builds_without_jobs(spark, jobs_during):
         lambda: built.append(QUERIES["eval_substring_decontam"](spark, SF))
     )
     assert build == read
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        built[0].explain("formatted")
-    p = buf.getvalue()
+    p = explained(built[0])
     assert "documents.parquet" in p
     assert "mat_" not in p
 
@@ -512,6 +514,35 @@ def test_cache_scoped_query_leaves_no_pinned_blocks(spark, name):
     leaked = _persistent_rdd_ids(spark) - before
     assert not leaked, f"{name} left pinned RDDs {leaked} after return"
     assert df.count() >= 0  # result survives the cache release
+
+
+def test_query_is_finalized_when_its_build_pins_a_cache(spark):
+    # registered with no option, a query whose build pins a scoped cache
+    # (and runs an action on it, as a Bloom build or a token total does)
+    # is finalized: its return leaves no pinned block and its plan scans
+    # the materialized result in a mat_* scratch directory
+    from bearysta_spark import queries as Q
+    from bearysta_spark.cachescope import release_scoped_caches, scoped_cache
+
+    name = "__pins_one_cache"
+
+    def build(spark, sf_dir):
+        ids = scoped_cache(spark.range(10))
+        return ids.selectExpr(f"id + {ids.count()} AS x")
+
+    try:
+        Q.query(name)(build)
+        spark.catalog.clearCache()
+        release_scoped_caches()
+        before = _persistent_rdd_ids(spark)
+        df = Q.QUERIES[name](spark, SF)
+        assert _persistent_rdd_ids(spark) == before
+        assert "mat_" in explained(df)
+        assert sorted(r.x for r in df.collect()) == list(range(10, 20))
+    finally:
+        for registry in (Q.QUERIES, Q.RAW_QUERIES, Q.ORACLE):
+            registry.pop(name, None)
+        release_scoped_caches()
 
 
 @pytest.mark.parametrize("name", ["near_dup_pairs", "image_phash_pairs"])
