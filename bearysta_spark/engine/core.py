@@ -306,11 +306,9 @@ class RecipeEngine:
         rewritten, ratio_calls = extract_ratio_calls(expr)
         tmp_cols = []
         for tmp, spec in ratio_calls:
-            fname = spec["func"]
-            base_func = getattr(ratio_ops, fname)
-            kw = {}
-            if "invert" not in fname and spec.get("invert"):
-                kw["invert"] = True
+            # a *_inv name is its base operator with invert=True, which
+            # extract_ratio_calls has already resolved into the spec
+            base_func = getattr(ratio_ops, spec["func"].removesuffix("_inv"))
             df = base_func(
                 df,
                 spec["value"],
@@ -320,7 +318,7 @@ class RecipeEngine:
                 variants=r.variants,
                 agg=r.aggregation,
                 out=tmp,
-                **kw,
+                invert=spec["invert"],
             )
             tmp_cols.append(tmp)
 

@@ -110,19 +110,37 @@ def extract_ratio_calls(expr: str) -> tuple[str, list[tuple[str, dict]]]:
                     raise ExprCompileError(
                         f"{node.func.id} first arg must be a column-name literal"
                     )
+                # keywords, plus `**{...}` dict literals, which let a base
+                # name a column that is no Python identifier ('Algo.name')
+                named = []
+                for kw in node.keywords:
+                    if kw.arg is not None:
+                        named.append((kw.arg, kw.value))
+                    elif isinstance(kw.value, ast.Dict) and all(
+                        isinstance(k, ast.Constant) and isinstance(k.value, str)
+                        for k in kw.value.keys
+                    ):
+                        named += [
+                            (k.value, v) for k, v in zip(kw.value.keys, kw.value.values)
+                        ]
+                    else:
+                        raise ExprCompileError(
+                            f"{node.func.id} ** must be a dict literal with "
+                            "string-literal keys"
+                        )
                 base = {}
                 invert = node.func.id.endswith("_inv")
-                for kw in node.keywords:
-                    if kw.arg == "invert":
-                        if not isinstance(kw.value, ast.Constant):
+                for name, value in named:
+                    if name == "invert":
+                        if not isinstance(value, ast.Constant):
                             raise ExprCompileError("invert must be a literal")
-                        invert = bool(kw.value.value)
+                        invert = bool(value.value)
                         continue
-                    if not isinstance(kw.value, ast.Constant):
+                    if not isinstance(value, ast.Constant):
                         raise ExprCompileError(
                             f"{node.func.id} base values must be literals"
                         )
-                    base[kw.arg] = kw.value.value
+                    base[name] = value.value
                 tmp = f"_ratio_tmp_{len(calls)}"
                 calls.append(
                     (

@@ -6,17 +6,16 @@ in the cluster, which IS the canonical choice).
 Algorithm: iterative min-label propagation (each node repeatedly takes
 the minimum label among itself and its neighbors) with a driver-side
 convergence loop. Iteration count is bounded by the component diameter;
-near-dup clusters are shallow (diameter ≤ 3-4 in practice), so this
-converges in a handful of rounds.
+near-dup clusters are shallow (the registered queries need at most 8
+rounds at sf0.01 and sf0.1, under the default cap of 20).
 
-Scale shape (100 TB): edges are localCheckpoint-ed once up front so the
-(expensive) pair-generation lineage is never replayed per iteration;
-each round is one shuffle join on the node key. For web-scale graphs
-with deep components, swap the propagation body for the large-star /
-small-star alternation (Kiveris et al., "Connected Components in
-MapReduce and Beyond") — same driver-loop skeleton, provably
-O(log^2 n) rounds; with near-dup diameters the plain form is fewer
-rounds and fewer shuffles.
+Scale shape (100 TB): lineage is truncated through scratch parquet
+(`scratch.materialize_distributed`), so nothing is pinned. The
+symmetric edge frame is written once, so the (expensive) pair-generation
+lineage is never replayed per iteration, and deleted after the loop.
+Each round is one shuffle join on the node key whose labels are written
+over the previous round's; the round also writes a `moved` flag, so the
+convergence check is a scan of one boolean column, not a join.
 
 Reference parity: the reference has no graph step — dedup clustering is
 a beyond-reference training-pipeline extension (BASELINE.json north
@@ -27,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from bearysta_spark.scratch import cleanup, materialize_distributed, path_of
 
 
 def connected_components(
@@ -39,52 +40,58 @@ def connected_components(
     reachable from it. Returns (node, component); rows are nodes, not
     edges. Deterministic — min-label is order-independent."""
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     # Truncate lineage NOW: the caller's edge pipeline (LSH + verify) is
     # expensive and must not be replayed once per iteration.
-    sym = sym.localCheckpoint(eager=True)
+    sym = materialize_distributed(
+        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))),
+        "cc_edges",
+    )
 
     labels = (
         sym.groupBy("a")
         .agg(F.min("b").alias("__mb"))
         .select("a", F.least("a", "__mb").alias("label"))
     )
-    for _ in range(max_iter):
-        nbr = (
-            sym.join(
-                labels.select(F.col("a").alias("b"), F.col("label")), "b"
+    prev = None
+    try:
+        for _ in range(max_iter):
+            nbr = (
+                sym.join(
+                    labels.select(F.col("a").alias("b"), F.col("label")), "b"
+                )
+                .groupBy("a")
+                .agg(F.min("label").alias("nbr_label"))
             )
-            .groupBy("a")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        new = (
-            labels.join(nbr, "a", "left")
-            .select(
-                "a",
-                F.least(
-                    F.col("label"), F.coalesce("nbr_label", F.col("label"))
-                ).alias("label"),
+            # labels only decrease, so a node moved iff a neighbor's
+            # label is below its own
+            labels = materialize_distributed(
+                labels.join(nbr, "a", "left").select(
+                    "a",
+                    F.least("label", F.coalesce("nbr_label", "label")).alias(
+                        "label"
+                    ),
+                    F.coalesce(F.col("nbr_label") < F.col("label"), F.lit(False))
+                    .alias("moved"),
+                ),
+                "cc_labels",
+                replaces=prev,
             )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new.join(labels.select("a", F.col("label").alias("old")), "a")
-            .filter(F.col("label") != F.col("old"))
-            .count()
-        )
-        labels = new
-        if changed == 0:
-            break
-    else:
-        # loop fell through max_iter with changed > 0: labels are NOT a
-        # fixpoint — a dedup caller would silently split deep duplicate
-        # chains into multiple clusters. Fail loudly; callers with
-        # genuinely deep graphs should raise max_iter or switch to the
-        # large-star/small-star form (module docstring).
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} "
-            f"iterations ({changed} labels still changing); raise max_iter"
-        )
+            prev = path_of(labels)
+            changed = labels.filter("moved").count()
+            if changed == 0:
+                break
+        else:
+            # loop fell through max_iter with changed > 0: labels are NOT
+            # a fixpoint — a dedup caller would silently split deep
+            # duplicate chains into multiple clusters. Fail loudly.
+            cleanup(labels)
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iter} "
+                f"iterations ({changed} labels still changing); raise "
+                "max_iter for components this deep"
+            )
+    finally:
+        cleanup(sym)
     return labels.select(
         F.col("a").alias("node"), F.col("label").alias("component")
     )
@@ -95,86 +102,4 @@ def cluster_sizes(labels: DataFrame) -> DataFrame:
     pass emits before dropping the non-canonical members."""
     return labels.groupBy("component").agg(
         F.count("*").cast("long").alias("n_docs")
-    )
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 50,
-) -> DataFrame:
-    """Large-star / small-star connected components (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond") — the web-scale form
-    the module docstring promises: provably O(log² n) alternation rounds
-    regardless of component DIAMETER, where min-label propagation needs
-    diameter-many rounds. Use this when components can be deep (link
-    graphs, co-citation); keep plain min-label for shallow near-dup
-    clusters (fewer shuffles per round).
-
-    Per round: large-star connects every larger neighbor of u to
-    min(Γ(u) ∪ {u}); small-star re-points each node's smaller neighbors
-    (plus itself) at their minimum. The fixpoint is a star per
-    component centered at its minimum id — identical labels to
-    connected_components (property-tested equivalence).
-
-    Same contract as connected_components: returns (node, component)
-    for every node in `edges`, component = min reachable id; raises on
-    non-convergence rather than returning split clusters."""
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    nodes = (
-        e.select(F.col("a").alias("node"))
-        .union(e.select(F.col("b").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    cur = (
-        e.select(F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iter):
-        sym = cur.union(cur.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("__mn"))
-            .select("u", F.least("u", "__mn").alias("m"))
-        )
-        ls = (
-            sym.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        mins2 = ls.groupBy("u").agg(F.min("v").alias("m"))
-        nxt = (
-            ls.join(mins2, "u")
-            .select(F.col("v").alias("x"), F.col("m"))
-            .union(mins2.select(F.col("u").alias("x"), F.col("m")))
-            .filter(F.col("x") != F.col("m"))
-            .select(F.col("x").alias("u"), F.col("m").alias("v"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        converged = (
-            nxt.subtract(cur).limit(1).count() == 0
-            and cur.subtract(nxt).limit(1).count() == 0
-        )
-        cur = nxt
-        if converged:
-            break
-    else:
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} "
-            "alternation rounds; raise max_iter"
-        )
-    return (
-        nodes.join(
-            cur.select(F.col("u").alias("node"), F.col("v").alias("component")),
-            "node",
-            "left",
-        )
-        .select("node", F.coalesce("component", "node").alias("component"))
     )

@@ -59,7 +59,8 @@ def ratio_of(
       ratio_diff      offset=-1        (ratio − 1)
       percent_of      scale=100
       percent_diff    scale=100 offset=-1   ((ratio−1)·100 semantics: see below)
-      *_inv           invert=True      (base/group instead of group/base)
+      *_inv           invert=True      (base/group instead of group/base;
+                                        a recipe's ratio_of_inv(...) etc.)
 
     Note percent_diff in the reference is (ratio−1)×100; we apply
     (ratio+offset)×scale, so offset=-1, scale=100 reproduces it.
@@ -106,19 +107,3 @@ def percent_of(df, value, base, series, **kw):
 
 def percent_diff(df, value, base, series, **kw):
     return ratio_of(df, value, base, series, offset=-1.0, scale=100.0, **kw)
-
-
-def ratio_of_inv(df, value, base, series, **kw):
-    return ratio_of(df, value, base, series, invert=True, **kw)
-
-
-def ratio_diff_inv(df, value, base, series, **kw):
-    return ratio_of(df, value, base, series, invert=True, offset=-1.0, **kw)
-
-
-def percent_of_inv(df, value, base, series, **kw):
-    return ratio_of(df, value, base, series, invert=True, scale=100.0, **kw)
-
-
-def percent_diff_inv(df, value, base, series, **kw):
-    return ratio_of(df, value, base, series, invert=True, offset=-1.0, scale=100.0, **kw)

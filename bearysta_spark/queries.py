@@ -2175,7 +2175,9 @@ def embedding_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-mult at 10×, SCALE_LADDER_r05). As with embedding_near_dup, the
     exact-SQL oracle is valid below EXACT_PAIRS_ROW_BUDGET; the routed
     regime is a documented approximation, verified by its own unit
-    tests rather than the oracle."""
+    tests rather than the oracle. Its build pins no cache (components
+    rolls its rounds through scratch parquet), so the registered form
+    returns the lazy plan over the components' labels directory."""
     from bearysta_spark.functions.components import connected_components
 
     e = _t(spark, sf_dir, "embeddings")
@@ -4339,7 +4341,10 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-document component ids; component id = min doc_id = the
     canonical document a dedup pass would keep. The DuckDB oracle is the
     same fixpoint via a recursive transitive-closure CTE — an exact
-    cross-engine check of an iterative graph algorithm."""
+    cross-engine check of an iterative graph algorithm. The components
+    rounds roll through scratch parquet and pin nothing; the one cache
+    the build pins (the verify shingles) makes the registered form
+    finalize and release it."""
     from bearysta_spark.functions.components import connected_components
 
     d = _t(spark, sf_dir, "documents")
@@ -4360,21 +4365,12 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same clustering contract as dedup_clusters, computed by the
-    web-scale large-star/small-star alternation
-    (functions.components.connected_components_star, O(log² n) rounds
-    independent of component diameter) — checked against the identical
-    recursive-CTE transitive-closure oracle, so BOTH component
-    algorithms carry an exact cross-engine fixpoint check."""
-    from bearysta_spark.functions.components import connected_components_star
-
-    d = _t(spark, sf_dir, "documents")
-    pairs = D.minhash_dedup_verified(d, num_hashes=12, bands=3, threshold=0.5)
-    labels = connected_components_star(pairs, "id_a", "id_b")
-    return labels.select(
-        F.col("node").cast("long").alias("doc_id"),
-        F.col("component").cast("long").alias("component"),
-    )
+    """The dedup_clusters result under its historical name (it once ran
+    a second, large-star/small-star components algorithm): the same
+    min-label components (functions.components) over the same verified
+    LSH pairs, checked against the identical recursive-CTE
+    transitive-closure oracle."""
+    return dedup_clusters(spark, sf_dir)
 
 
 @query(
@@ -4401,7 +4397,8 @@ def dedup_canonical_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per source: total docs, kept, dropped — the numbers a pipeline
     reports after a dedup pass. Oracle replays the full chain
     (LSH candidates → Jaccard verify → recursive transitive closure →
-    keep-min) in SQL."""
+    keep-min) in SQL. Like dedup_clusters, it pins only the verify
+    cache, which its finalize releases."""
     from bearysta_spark.functions.components import connected_components
 
     d = _t(spark, sf_dir, "documents")
@@ -4470,7 +4467,8 @@ def dedup_canonical_by_quality(
     100 TB shape: identical to dedup_canonical_corpus plus one
     component-grain window (the component table is pair-bounded, tiny
     next to the corpus; unclustered docs are their own component and
-    pay no shuffle beyond the same left join)."""
+    pay no shuffle beyond the same left join). Like dedup_clusters, it
+    pins only the verify cache, which its finalize releases."""
     from bearysta_spark.functions.components import connected_components
 
     d = _t(spark, sf_dir, "documents")
@@ -6512,7 +6510,8 @@ def dedup_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the shared recursive-CTE transitive closure. Scale shape:
     everything after pair generation operates on the pair/cluster
     frames (≪ corpus); the per-cluster aggregate shuffles only
-    clustered doc ids."""
+    clustered doc ids. Like dedup_clusters, it pins only the verify
+    cache, which its finalize releases."""
     from bearysta_spark.functions.components import connected_components
 
     d = _t(spark, sf_dir, "documents")

@@ -7,14 +7,15 @@ write and every future reader can scan); the fallback is a pid-keyed
 node-local tempdir, valid for local mode and cleaned at interpreter
 exit.
 
-`materialize_distributed` is the repo's plan-truncation primitive: a
-parquet write + schema-pinned re-read. Unlike persist() it truncates
+`materialize_distributed` is the repo's one plan-truncation primitive:
+a parquet write + schema-pinned re-read. Unlike persist() it truncates
 the LOGICAL plan (an iterative algorithm whose round references its
 state multiple times otherwise grows its plan multiplicatively until
-plan *stringification* alone OOMs the driver), unlike localCheckpoint()
+plan *stringification* alone OOMs the driver), unlike an RDD checkpoint
 it pins no RDD blocks (the zero-pinned-blocks contract, r05 VERDICT),
 and unlike collect() it never funnels rows through the driver (r06
-VERDICT finding #1).
+VERDICT finding #1). Iterative callers (bpe_train, connected
+components) roll their per-round state through it with `replaces=`.
 
 Paths are namespaced per process (`mat_{run}_{seq}_{tag}`, run = a
 random hex token): two drivers pointed at the SAME shared scratch root

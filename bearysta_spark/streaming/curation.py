@@ -1070,7 +1070,7 @@ def start_streaming_curation_ingest(
     spark = stream_docs.sparkSession
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        # no persist/localCheckpoint: the gate projection is scan-side
+        # no persist or checkpoint: the gate projection is scan-side
         # and batch-sized, so the few actions below recompute it (the
         # start_streaming_self_neardup convention — nothing stays
         # pinned across batches of a long-running stream)

@@ -58,48 +58,78 @@ def test_unconverged_raises(spark):
         connected_components(edges, max_iter=2)
 
 
-# ---------------------------------------------------------------------------
-# Large-star/small-star variant (web-scale form)
-# ---------------------------------------------------------------------------
-
-
-def _labels_star(spark, edges, **kw):
-    from bearysta_spark.functions.components import connected_components_star
-
-    df = spark.createDataFrame(edges, ["id_a", "id_b"])
-    got = connected_components_star(df, **kw)
-    return {r["node"]: r["component"] for r in got.collect()}
-
-
-def test_star_two_components(spark):
-    got = _labels_star(spark, [(1, 2), (2, 3), (10, 11)])
-    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
-
-
-def test_star_deep_path_converges_fast(spark):
-    # a 16-node path has diameter 15; the alternation must finish in
-    # O(log^2 n) rounds — well under the 10-round cap that would choke
-    # min-label propagation
-    edges = [(i, i + 1) for i in range(15)]
-    got = _labels_star(spark, edges, max_iter=10)
+def test_deep_path_converges_at_default_max_iter(spark):
+    # a 16-node path has diameter 15: min-label needs one round per hop
+    # (plus the round that sees nothing move), inside the default cap
+    got = _labels(spark, [(i, i + 1) for i in range(15)])
     assert got == {i: 0 for i in range(16)}
 
 
-def test_star_empty(spark):
-    from bearysta_spark.functions.components import connected_components_star
-
+def test_empty_edges_keep_the_label_schema(spark):
     df = spark.createDataFrame([], "id_a long, id_b long")
-    assert connected_components_star(df).count() == 0
+    got = connected_components(df)
+    assert got.dtypes == [("node", "bigint"), ("component", "bigint")]
+    assert got.collect() == []
 
 
-# r14: 40 random graphs x 2 iterative CC runs ~= 23 s of the quiet
-# suite; property coverage, deselected by default with the other
-# slow tests (run with -m slow). The deterministic CC tests above
-# stay in the default gate.
+def test_leaves_only_the_returned_labels_in_scratch(spark):
+    # the edge frame and every round's labels are scratch parquet: after
+    # one call only the returned labels' directory is left, and nothing
+    # is pinned
+    import os
+
+    from bearysta_spark.scratch import path_of, scratch_root
+
+    def mats():
+        root = scratch_root()
+        if not os.path.isdir(root):
+            return set()
+        return {d for d in os.listdir(root) if d.startswith("mat_")}
+
+    def pinned():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+    before, pinned_before = mats(), pinned()
+    df = spark.createDataFrame(
+        [(i, i + 1) for i in range(5)] + [(10, 11)], ["id_a", "id_b"]
+    )
+    got = connected_components(df)
+    new = mats() - before
+    assert len(new) == 1
+    assert os.path.basename(path_of(got)) in new
+    assert pinned() == pinned_before
+    assert {r["node"]: r["component"] for r in got.collect()} == {
+        **{i: 0 for i in range(6)},
+        10: 10,
+        11: 10,
+    }
+
+
+def _union_find_labels(edges):
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    # union by min root keeps every root the minimum of its component
+    return {x: find(x) for x in parent}
+
+
+# Property coverage over seeded random graphs, deselected by default
+# with the other slow tests (run with -m slow). The deterministic CC
+# tests above stay in the default gate.
 @pytest.mark.slow
-def test_star_matches_min_label_random_graphs(spark):
-    # deterministic pseudo-random multigraphs: both algorithms must
-    # produce identical (node -> component-min) labelings
+def test_matches_union_find_random_graphs(spark):
+    # deterministic pseudo-random multigraphs: min-label components must
+    # equal a pure-Python union-find's (node -> component-min) labeling
     import random
 
     rnd = random.Random(1234)
@@ -111,9 +141,9 @@ def test_star_matches_min_label_random_graphs(spark):
         ]
         edges = [e for e in edges if e[0] != e[1]] or [(0, 1)]
         df = spark.createDataFrame(edges, ["id_a", "id_b"])
-        a = {
+        got = {
             r["node"]: r["component"]
             for r in connected_components(df, max_iter=50).collect()
         }
-        b = _labels_star(spark, edges)
-        assert a == b, f"trial {trial}: {sorted(a.items())} != {sorted(b.items())}"
+        want = _union_find_labels(edges)
+        assert got == want, f"trial {trial}: {sorted(got.items())} != {sorted(want.items())}"

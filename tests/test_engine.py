@@ -81,6 +81,40 @@ def test_blackscholes_like_recipe(spark, bs_tree):
     assert rows[("Native-C", 1000)]["File"] == "run.out"
 
 
+@pytest.mark.parametrize(
+    "name", ["ratio_of_inv", "ratio_diff_inv", "percent_of_inv", "percent_diff_inv"]
+)
+def test_inverted_ratio_precompute(spark, tmp_path, name):
+    # a *_inv precompute is its base operator with invert=True
+    write(
+        tmp_path / "d.csv",
+        "Vendor,Size,MOPS\nref,1000,100.0\nfast,1000,50.0\nref,2000,80.0\nfast,2000,20.0\n",
+    )
+    base = name.removesuffix("_inv")
+    recipe = {
+        "input": {"path": str(tmp_path / "d.csv"), "format": "csv"},
+        "precomputed": {
+            "Inv": f"{name}('MOPS', Vendor='ref')",
+            "Base": f"{base}('MOPS', Vendor='ref', invert=True)",
+        },
+        "aggregation": "mean",
+        "series": ["Vendor"],
+        "axis": ["Size"],
+        "values": ["Inv", "Base"],
+    }
+    rows = RecipeEngine(spark, recipe).aggregated().collect()
+    assert len(rows) == 4
+    assert all(r["Inv"] is not None and r["Inv"] == r["Base"] for r in rows)
+    fast = {r["Size"]: r["Inv"] for r in rows if r["Vendor"] == "fast"}
+    scale, offset = {
+        "ratio_of": (1, 0),
+        "ratio_diff": (1, -1),
+        "percent_of": (100, 0),
+        "percent_diff": (100, -1),
+    }[base]
+    assert fast == {1000: (2.0 + offset) * scale, 2000: (4.0 + offset) * scale}
+
+
 # ---------------------------------------------------------------------------
 # A9-style: multi-line `append` join
 # ---------------------------------------------------------------------------
@@ -483,12 +517,9 @@ def test_dotted_dimension_names(spark, tmp_path, caplog):
     )
     recipe = {
         "input": {"path": str(tmp_path / "d.csv"), "format": "csv"},
-        # a ratio base is a keyword argument, so it names an identifier
-        # column; the ratio still groups by the dotted dimensions
-        "precomputed": {
-            "Ref": "row['Algo.name']",
-            "Speedup": "ratio_of('Time.s', Ref='ref')",
-        },
+        # a base column that is no identifier is named through a `**`
+        # dict literal
+        "precomputed": {"Speedup": "ratio_of('Time.s', **{'Algo.name': 'ref'})"},
         "aggregation": "mean",
         "series": ["Algo.name"],
         "axis": ["n.rows"],

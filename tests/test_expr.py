@@ -129,6 +129,26 @@ def test_extract_multiple_ratio_calls():
     assert calls[1][1]["invert"] is True
 
 
+def test_ratio_base_names_a_dotted_column_through_a_dict_literal():
+    _, calls = extract_ratio_calls(
+        "ratio_of_inv('Time.s', **{'Algo.name': 'ref'}, Arch='icx')"
+    )
+    assert calls[0][1] == {
+        "func": "ratio_of_inv",
+        "value": "Time.s",
+        "base": {"Algo.name": "ref", "Arch": "icx"},
+        "invert": True,
+    }
+    for bad in (
+        "ratio_of('T', **base)",
+        "ratio_of('T', **{k: 'ref'})",
+        "ratio_of('T', **{'A.b': row['x']})",
+        "ratio_of('T', **{**base})",
+    ):
+        with pytest.raises(ExprCompileError):
+            extract_ratio_calls(bad)
+
+
 def test_unsupported_raises(df):
     with pytest.raises(ExprCompileError):
         compile_expr(df, "__import__('os').system('true')")

@@ -134,8 +134,7 @@ def test_no_bare_cache_outside_scoped_cache():
     # a registered query finalizes exactly when its build registered a
     # cache through scoped_cache; a bare .cache()/.persist() is invisible
     # to that scope and would pin blocks past the query's return.
-    # (components.py's localCheckpoint is documented lineage truncation;
-    # the streaming foreachBatch persists free themselves per batch.)
+    # (The streaming foreachBatch persists free themselves per batch.)
     bare = re.compile(r"\.cache\(\s*\)|\.persist\(")
     files = [PACKAGE / "queries.py"] + [
         path
@@ -147,5 +146,18 @@ def test_no_bare_cache_outside_scoped_cache():
         for path in files
         for i, line in enumerate(path.read_text().splitlines(), 1)
         if bare.search(line)
+    ]
+    assert not offenders, offenders
+
+
+def test_no_checkpoint_in_the_package():
+    # lineage is truncated only through scratch parquet
+    # (scratch.materialize_distributed): a checkpoint pins RDD blocks no
+    # cache scope releases
+    offenders = [
+        f"{path.relative_to(PACKAGE)}:{i}"
+        for path in sorted(PACKAGE.rglob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if "localCheckpoint(" in line or ".checkpoint(" in line
     ]
     assert not offenders, offenders

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pytest
 
@@ -410,9 +411,8 @@ def test_executed_plan_scan_budget(spark, name, table, budget):
 # Registered queries whose build pins a scoped cache (directly or via a
 # library call: LSH verify shingles, BM25 per-doc norms, Bloom bench
 # grams, HLL registers, ...), so their registered form finalizes. The
-# dedup_clusters* family is excluded: connected components
-# localCheckpoints its frontier by design (documented
-# lineage-truncation, not a cache leak).
+# clustering queries are here too: connected components truncates its
+# lineage through scratch parquet, so it pins nothing of its own.
 CACHE_SCOPED_SAMPLE = [
     "expected_fill_combos",
     "cms_heavy_hitters",
@@ -441,6 +441,11 @@ CACHE_SCOPED_SAMPLE = [
     "tokenizer_fertility_agreement",
     "trigram_backoff_surprise",
     "trigram_perplexity_buckets",
+    "dedup_clusters",
+    "dedup_clusters_star",
+    "dedup_canonical_corpus",
+    "dedup_canonical_by_quality",
+    "dedup_cluster_purity",
 ]
 
 
@@ -451,6 +456,7 @@ CACHE_SCOPED_SAMPLE = [
 UNSCOPED_SAMPLE = [
     "eval_substring_decontam",
     "eval_substring_decontam_persisted",
+    "embedding_dup_clusters",
 ]
 
 
@@ -462,7 +468,11 @@ def test_unscoped_query_leaves_no_pinned_blocks(spark, name):
     release_scoped_caches()
     before = _persistent_rdd_ids(spark)
     df = QUERIES[name](spark, SF)
-    assert "mat_" not in explained(df)  # not finalized
+    # not finalized: no scan of a _finalize result directory (a query
+    # may still scan scratch parquet its build wrote, as connected
+    # components' labels)
+    assert not re.search(r"mat_\w+_result", explained(df))
+    assert _persistent_rdd_ids(spark) == before, f"{name} pinned RDDs"
     df.write.format("noop").mode("overwrite").save()
     leaked = _persistent_rdd_ids(spark) - before
     assert not leaked, f"{name} left pinned RDDs {leaked} after running"
@@ -514,6 +524,8 @@ def test_cache_scoped_query_leaves_no_pinned_blocks(spark, name):
     leaked = _persistent_rdd_ids(spark) - before
     assert not leaked, f"{name} left pinned RDDs {leaked} after return"
     assert df.count() >= 0  # result survives the cache release
+    leaked = _persistent_rdd_ids(spark) - before
+    assert not leaked, f"{name} left pinned RDDs {leaked} after running"
 
 
 def test_query_is_finalized_when_its_build_pins_a_cache(spark):
