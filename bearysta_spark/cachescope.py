@@ -14,8 +14,11 @@ creates via ``scoped_cache``, and every registered query builds its
 plan inside a scope (queries.query). A build whose scope captured at
 least one cache is finalized — its result materialized, then exactly
 those caches released (queries._finalize); a build that captured none
-returns its lazy plan. Contract: a registered query is a ONE-SHOT
-report that leaves no pinned block behind (asserted by
+returns its lazy plan. A scope also records the scratch directories
+`scratch.materialize_distributed` writes while it is open
+(``scoped_dir``); a finalized query deletes them after its result
+write, since the result no longer scans them. Contract: a registered
+query is a ONE-SHOT report that leaves no pinned block behind (asserted by
 tests/test_plans.py against getPersistentRDDs). The scope sees only
 caches made through ``scoped_cache``, so the packages under it never
 call a bare ``.cache()``/``.persist()`` (tests/test_local_frames.py
@@ -59,6 +62,9 @@ class CacheScope:
     def __init__(self) -> None:
         self._dfs: list[DataFrame] = []
         self._released = False
+        #: scratch directories written while this scope was innermost
+        #: (``scoped_dir``); not counted by ``len``
+        self.dirs: list[str] = []
 
     def _add(self, df: DataFrame) -> None:
         self._dfs.append(df)
@@ -126,6 +132,17 @@ def scoped_cache(df: DataFrame) -> DataFrame:
         with _LOCK:
             _GLOBAL.append(df)
     return df
+
+
+def scoped_dir(path: str) -> None:
+    """Record a scratch directory in the innermost open
+    :class:`CacheScope` on this thread, if any. The scope's holder
+    decides whether the directory is dead: a finalized query deletes
+    those its build wrote once its result is materialized
+    (queries._finalize)."""
+    stack = getattr(_TLS, "stack", None)
+    if stack:
+        stack[-1].dirs.append(path)
 
 
 def release_scoped_caches() -> int:

@@ -39,6 +39,8 @@ def connected_components(
     """Label every node appearing in `edges` with the minimum node id
     reachable from it. Returns (node, component); rows are nodes, not
     edges. Deterministic — min-label is order-independent."""
+    if max_iter < 1:
+        raise ValueError(f"max_iter must be at least 1, got {max_iter}")
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     # Truncate lineage NOW: the caller's edge pipeline (LSH + verify) is
     # expensive and must not be replayed once per iteration.

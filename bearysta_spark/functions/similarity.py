@@ -24,6 +24,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
+from bearysta_spark.colnames import qname
+
 logger = logging.getLogger(__name__)
 
 #: Row budget for the EXACT all-pairs cosine verifier. N at the budget
@@ -1008,6 +1010,31 @@ def make_pq_codebooks(
     return c.tolist()
 
 
+def _codebooks_sql(codebooks: list[list[list[float]]]) -> str:
+    """The codebooks as one nested `array(...)` SQL literal of
+    shortest-round-trip doubles; Catalyst folds it to a single
+    constant."""
+
+    def arr(items) -> str:
+        return "array(" + ", ".join(items) + ")"
+
+    return arr(
+        arr(arr(repr(float(x)) + "D" for x in c) for c in book)
+        for book in codebooks
+    )
+
+
+def _pq_score_sql(codebooks: list[list[list[float]]], vec_col: str) -> str:
+    """The inner product of subspace `pq_j`'s slice of `vec_col` with
+    centroid `pq_c` (lambda variables of the caller's `transform`s),
+    folded in the same order as `dot()`."""
+    dsub = len(codebooks[0][0])
+    return (
+        f"aggregate(zip_with(slice({qname(vec_col)}, pq_j * {dsub} + 1, {dsub}), pq_c,"
+        " (pq_x, pq_y) -> double(pq_x) * double(pq_y)), 0D, (pq_a, pq_b) -> pq_a + pq_b)"
+    )
+
+
 def pq_code_rows(
     df: DataFrame,
     codebooks: list[list[list[float]]],
@@ -1017,44 +1044,32 @@ def pq_code_rows(
     """PQ encoding as (id, j, cell) rows: for each subspace j, the
     argmax-inner-product centroid of the j-th vector slice (the
     FAISS IndexPQ METRIC_INNER_PRODUCT quantizer). One scan, no
-    shuffle; the codebooks fold into the plan as literals. Ties break
-    by ascending cell id (stable in any engine).
+    shuffle, no Python worker: the whole encoder is ONE SQL expression
+    — a `transform` over the codebooks, inlined once as a nested
+    literal, whose scores are `dot()`'s sequential double fold
+    (bit-equal to a Python `acc += x * c` loop). Ties break by
+    ascending cell id (`array_max` over (score, -cell) structs; stable
+    in any engine). The plan is built by one `F.expr` call.
+
+    The fold is interpreted per row (higher-order functions do not
+    codegen), so per row it costs more than the Arrow dgemm kernel
+    (pq_code_rows_arrow): encoding 50k d=64 vectors in 4 tasks took
+    6.0-7.8 s of steady-state CPU against 2.8-3.5 s (4-core host,
+    local[4]). The kernel instead pays a fixed ~0.5 s of CPU per task
+    (~0.2 s in the Python worker, the rest in the JVM), so the fold is
+    cheaper below roughly 4k vectors per task; corpus-scale encoders
+    keep the kernel.
 
     The code table is the compressed index a production system persists:
     m small ints per vector (m bytes at ksub<=256) instead of dim
     floats — 32× smaller at d=64, m=8."""
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
-
-    def argmax_cell(j: int) -> Column:
-        sub = F.slice(F.col(vec_col), j * dsub + 1, dsub)
-        pairs = F.array(
-            *[
-                F.struct(
-                    dot(sub, F.array(*[F.lit(float(x)) for x in c])).alias("score"),
-                    F.lit(-cid).alias("negcell"),
-                )
-                for cid, c in enumerate(codebooks[j])
-            ]
-        )
-        # max struct = (highest score, then highest negcell = lowest cell)
-        return -F.array_max(pairs)["negcell"]
-
-    coded = df.select(
-        F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("j"),
-                        argmax_cell(j).cast("int").alias("cell"),
-                    )
-                    for j in range(m)
-                ]
-            )
-        ).alias("jc"),
+    score = _pq_score_sql(codebooks, vec_col)
+    codes = (
+        f"transform({_codebooks_sql(codebooks)}, (pq_book, pq_j) -> named_struct("
+        "'j', pq_j, 'cell', -array_max(transform(pq_book, (pq_c, pq_k) -> "
+        f"named_struct('score', {score}, 'negcell', -pq_k))).negcell))"
     )
-    return coded.select(id_col, F.col("jc.j").alias("j"), F.col("jc.cell").alias("cell"))
+    return df.select(F.col(id_col), F.expr(f"inline({codes})"))
 
 
 def pq_codes_arrow(codebooks: list[list[list[float]]]):
@@ -1094,10 +1109,17 @@ def pq_code_rows_arrow(
     """Arrow-batched PQ encoding: one `batch_sub @ codebook.T` dgemm per
     subspace per Arrow batch, stable argmax (ties → lowest cell id).
 
-    Same IVF lesson as assign_cells_arrow: the literal-expression
-    encoder builds m·ksub·dsub literals into the plan, exceeds the
-    codegen method-size limit and runs interpreted (measured ~2.5 s vs
-    ~0.4 s at sf0.1). Exactness: dgemm accumulation can differ from the
+    The kernel for corpus-scale encoding. The expression encoder
+    (pq_code_rows) is a one-literal fold that runs interpreted: at 50k
+    d=64 vectors in 4 tasks it took 6.0-7.8 s of CPU to this kernel's
+    2.8-3.5 s (4-core host). But each task of this kernel pays ~0.2 s
+    of Python-worker CPU and ~0.3 s of JVM CPU before its first row, so
+    below roughly 4k vectors per task the fold is cheaper (knn_pq_adc
+    at sf0.1: 2,000 vectors, 1.15 s wall with the fold against 1.35 s
+    with this kernel). The ~2.5 s vs ~0.4 s at sf0.1 measured earlier
+    was against the per-literal Column-tree encoder the fold replaced,
+    whose m·ksub·dsub literals outgrew the codegen method-size limit.
+    Exactness: dgemm accumulation can differ from the
     sequential fold by ~1 ulp; argmax cells are unaffected away from
     exact score ties (asserted equal to the expression encoder in
     tests), and downstream ADC sums round at 4dp in DECIMAL where a
@@ -1123,23 +1145,19 @@ def pq_lut_rows(
 ) -> DataFrame:
     """Per-query ADC lookup table as (qid, j, cell, s) rows: the inner
     product of each query sub-slice with every sub-centroid. |Q|·m·ksub
-    rows — tiny for query batches, broadcast to the code join."""
-    m = len(codebooks)
-    dsub = len(codebooks[0][0])
-    entries = []
-    for j in range(m):
-        sub = F.slice(F.col(vec_col), j * dsub + 1, dsub)
-        for cid, c in enumerate(codebooks[j]):
-            entries.append(
-                F.struct(
-                    F.lit(j).alias("j"),
-                    F.lit(cid).alias("cell"),
-                    dot(sub, F.array(*[F.lit(float(x)) for x in c])).alias("s"),
-                )
-            )
+    rows — tiny for query batches, broadcast to the code join. Built as
+    one SQL expression over the one codebook literal, with
+    pq_code_rows' fold, so each `s` is bit-equal to the score the
+    encoder ranked."""
+    score = _pq_score_sql(codebooks, vec_col)
+    lut = (
+        f"flatten(transform({_codebooks_sql(codebooks)}, (pq_book, pq_j) -> "
+        "transform(pq_book, (pq_c, pq_k) -> "
+        f"named_struct('j', pq_j, 'cell', pq_k, 's', {score}))))"
+    )
     return queries.select(
-        F.col(id_col).alias("qid"), F.explode(F.array(*entries)).alias("e")
-    ).select("qid", "e.j", "e.cell", "e.s")
+        F.col(id_col).alias("qid"), F.expr(f"inline({lut})")
+    )
 
 
 def pq_lut_rows_arrow(

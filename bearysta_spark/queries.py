@@ -35,7 +35,7 @@ from bearysta_spark.operators import (
     ratio_of,
 )
 from bearysta_spark.operators.ratio import percent_diff
-from bearysta_spark.tables import load_table
+from bearysta_spark.tables import _files_fingerprint, load_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
@@ -116,11 +116,16 @@ def _finalize(df: DataFrame, scope: CacheScope) -> DataFrame:
     corpus-proportional output, and the r06 VERDICT graded the previous
     collect()-based finalizer weak-at-100× for exactly that reason.
     The write is executor-side and the returned frame stays a
-    distributed parquet scan."""
-    from bearysta_spark.scratch import materialize_distributed
+    distributed parquet scan. The scratch directories the build wrote
+    (`scope.dirs`, e.g. connected components' labels) are deleted after
+    the write: the result no longer scans them."""
+    from bearysta_spark.scratch import materialize_distributed, remove_dir
 
+    written = list(scope.dirs)
     out = materialize_distributed(df, "result")
     scope.release()
+    for path in written:
+        remove_dir(path)
     return out
 
 
@@ -3537,18 +3542,24 @@ def knn_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes (argmax-IP sub-centroid per slice — see
     similarity.pq_code_rows), queries build an m×ksub lookup table, and
     the approximate score is the sum of LUT entries at the corpus codes.
+    Encoder and LUT are one-expression JVM folds, so the query starts no
+    Python worker.
 
     The 100 TB shape: the scan reads the m-byte code table (32× smaller
     than raw d=64 floats), the LUT is a broadcast, and the only wide op
     is a map-side-combined sum on (qid, nid). The ADC sum uses the
     DECIMAL dsum so Spark's partial-agg order and DuckDB's sequential
-    scan agree bit-for-bit; ranks tie-break by nid."""
+    scan agree bit-for-bit; ranks tie-break by nid.
+
+    The folds (pq_code_rows, pq_lut_rows) cost more per row than the
+    Arrow dgemm kernels, but at this query's 500-2,000 corpus rows and
+    5 query rows that is far below the ~0.2 s of worker CPU each
+    Arrow-kernel task pays. Corpus-scale encoders (ivf_pq_topk, the
+    persisted PQ index) keep the Arrow kernel."""
     e = _t(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 5)
-    codes = S.pq_code_rows_arrow(e, _PQ_CODEBOOKS).withColumnRenamed(
-        "vec_id", "nid"
-    )
-    lut = S.pq_lut_rows_arrow(q, _PQ_CODEBOOKS)
+    codes = S.pq_code_rows(e, _PQ_CODEBOOKS).withColumnRenamed("vec_id", "nid")
+    lut = S.pq_lut_rows(q, _PQ_CODEBOOKS)
     scored = (
         codes.join(F.broadcast(lut), ["j", "cell"])
         .filter(F.col("qid") != F.col("nid"))
@@ -8972,22 +8983,6 @@ _CLF_TRAIN_MWL10 = 45
 #: The key carries the corpus files' (path, size, mtime_ns), so a
 #: corpus rewritten in place misses instead of serving the old history.
 _CLF_TRAIN_MEMO: dict[tuple, list] = {}
-
-
-def _files_fingerprint(path: str) -> tuple:
-    """(path, size, mtime_ns) of the file at `path`, or of every file
-    under the directory at `path` (a directory of part files)."""
-    import os
-
-    if os.path.isfile(path):
-        files = [path]
-    else:
-        files = sorted(
-            os.path.join(root, f) for root, _, fs in os.walk(path) for f in fs
-        )
-    return tuple(
-        (f, st.st_size, st.st_mtime_ns) for f in files for st in [os.stat(f)]
-    )
 
 
 def _clf_train_history(

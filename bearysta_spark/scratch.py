@@ -34,6 +34,8 @@ import uuid
 
 from pyspark.sql import DataFrame
 
+from bearysta_spark.cachescope import scoped_dir
+
 _FALLBACK: str | None = None
 #: itertools.count is atomic under the GIL — two queries running
 #: concurrently on different threads (the scenario CacheScope's
@@ -71,13 +73,25 @@ def materialize_distributed(
     leak one vocab-sized directory per round onto shared storage.
     Deletion covers filesystem paths; URI-schemed roots (hdfs://,
     s3a://) are skipped silently — clean those with storage lifecycle
-    rules."""
+    rules.
+
+    The path is recorded in the innermost open CacheScope
+    (`cachescope.scoped_dir`), so a finalized query can delete what its
+    build wrote."""
     path = os.path.join(scratch_root(), f"mat_{_RUN}_{next(_SEQ)}_{tag}")
     df.write.mode("overwrite").parquet(path)
+    scoped_dir(path)
     out = df.sparkSession.read.schema(df.schema).parquet(path)
-    if replaces is not None and "://" not in replaces:
-        shutil.rmtree(replaces, ignore_errors=True)
+    if replaces is not None:
+        remove_dir(replaces)
     return out
+
+
+def remove_dir(path: str) -> None:
+    """Best-effort delete of a scratch directory; URI-schemed paths
+    (hdfs://, s3a://) are skipped."""
+    if "://" not in path:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def cleanup(df: DataFrame) -> None:
@@ -93,8 +107,8 @@ def cleanup(df: DataFrame) -> None:
     interpreter exit; shared BEARYSTA_SCRATCH_DIR roots should carry a
     storage lifecycle rule on mat_* prefixes)."""
     p = path_of(df)
-    if p is not None and "://" not in p:
-        shutil.rmtree(p, ignore_errors=True)
+    if p is not None:
+        remove_dir(p)
 
 
 def path_of(df: DataFrame) -> str | None:

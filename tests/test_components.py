@@ -58,6 +58,25 @@ def test_unconverged_raises(spark):
         connected_components(edges, max_iter=2)
 
 
+def _mats() -> set:
+    import os
+
+    from bearysta_spark.scratch import scratch_root
+
+    root = scratch_root()
+    if not os.path.isdir(root):
+        return set()
+    return {d for d in os.listdir(root) if d.startswith("mat_")}
+
+
+def test_max_iter_below_one_raises_before_writing(spark):
+    before = _mats()
+    edges = spark.createDataFrame([(1, 2)], "id_a: long, id_b: long")
+    with pytest.raises(ValueError, match="max_iter"):
+        connected_components(edges, max_iter=0)
+    assert _mats() == before
+
+
 def test_deep_path_converges_at_default_max_iter(spark):
     # a 16-node path has diameter 15: min-label needs one round per hop
     # (plus the round that sees nothing move), inside the default cap
@@ -78,23 +97,17 @@ def test_leaves_only_the_returned_labels_in_scratch(spark):
     # is pinned
     import os
 
-    from bearysta_spark.scratch import path_of, scratch_root
-
-    def mats():
-        root = scratch_root()
-        if not os.path.isdir(root):
-            return set()
-        return {d for d in os.listdir(root) if d.startswith("mat_")}
+    from bearysta_spark.scratch import path_of
 
     def pinned():
         return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
 
-    before, pinned_before = mats(), pinned()
+    before, pinned_before = _mats(), pinned()
     df = spark.createDataFrame(
         [(i, i + 1) for i in range(5)] + [(10, 11)], ["id_a", "id_b"]
     )
     got = connected_components(df)
-    new = mats() - before
+    new = _mats() - before
     assert len(new) == 1
     assert os.path.basename(path_of(got)) in new
     assert pinned() == pinned_before

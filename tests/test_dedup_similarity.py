@@ -449,6 +449,56 @@ def test_pq_arrow_codes_equal_expression_codes(spark, embeddings):
     assert expr_codes == arrow_codes
 
 
+def _fold_ref(sub, centroid):
+    # dot()'s order: a sequential double accumulation from 0.0
+    acc = 0.0
+    for x, c in zip(sub, centroid):
+        acc += float(x) * c
+    return acc
+
+
+def test_pq_folds_equal_sequential_python_reference(spark, embeddings):
+    # codes and LUT scores, bit for bit, against a pure-Python
+    # `acc += x * c` loop; ties go to the lowest cell
+    cb = S.make_pq_codebooks(dim=64, m=8, ksub=8, seed=11)
+    dsub = 8
+    want_codes, want_lut = set(), {}
+    for vid, v in embeddings.select("vec_id", "embedding").collect():
+        for j, book in enumerate(cb):
+            scores = [_fold_ref(v[j * dsub : (j + 1) * dsub], c) for c in book]
+            want_codes.add((vid, j, scores.index(max(scores))))
+            if vid < 3:
+                want_lut.update({(vid, j, k): s for k, s in enumerate(scores)})
+    codes = S.pq_code_rows(embeddings, cb)
+    assert codes.dtypes == [("vec_id", "bigint"), ("j", "int"), ("cell", "int")]
+    assert set(map(tuple, codes.collect())) == want_codes
+    lut = S.pq_lut_rows(embeddings.filter(F.col("vec_id") < 3), cb)
+    assert {tuple(r[:3]): r[3] for r in lut.collect()} == want_lut
+
+
+def test_pq_code_rows_builds_with_one_codebook_literal(spark, embeddings):
+    # the encoder is one F.expr: a few dozen py4j calls, not one per
+    # codebook entry (the per-literal Column trees made ~14,700), and
+    # the optimized plan holds the codebooks as one folded literal
+    cb = S.make_pq_codebooks(dim=64, m=8, ksub=8, seed=11)
+    client = spark.sparkContext._gateway._gateway_client
+    calls = []
+    send = client.send_command
+
+    def counting(*a, **k):
+        calls.append(1)
+        return send(*a, **k)
+
+    client.send_command = counting
+    try:
+        codes = S.pq_code_rows(embeddings, cb)
+    finally:
+        del client.send_command
+    assert len(calls) < 100, len(calls)
+    plan = codes._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("[[[") == 1
+
+
 def test_pq_arrow_lut_equals_expression_lut(spark, embeddings):
     # keys identical; values agree to <=1 ulp (BLAS dgemm vs sequential
     # fold accumulation order) — the registered query rounds the ADC sum

@@ -161,3 +161,22 @@ def test_no_checkpoint_in_the_package():
         if "localCheckpoint(" in line or ".checkpoint(" in line
     ]
     assert not offenders, offenders
+
+
+#: Python-worker UDF sites under bearysta_spark/. Array arithmetic that
+#: SQL can express runs as JVM folds instead (ROADMAP item 5); this
+#: ceiling only ever moves down.
+UDF_SITES_CEILING = 31
+
+
+def test_udf_site_count_does_not_rise():
+    site = re.compile(
+        r"@pandas_udf|\bpandas_udf\(|\.mapInPandas\(|\.mapInArrow\(|\bF\.udf\b"
+    )
+    sites = [
+        f"{path.relative_to(PACKAGE)}:{i}"
+        for path in sorted(PACKAGE.rglob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if site.search(line)
+    ]
+    assert len(sites) <= UDF_SITES_CEILING, sites

@@ -199,6 +199,13 @@ def test_knn_pq_adc_no_nested_loop_and_partial_agg(spark):
     assert "partial" in p.lower()
 
 
+def test_knn_pq_adc_starts_no_python_worker(spark):
+    # encoder and LUT are JVM folds: no Python evaluation node anywhere
+    p = plan_of(spark, "knn_pq_adc")
+    for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
+        assert node not in p
+
+
 def test_value_band_join_is_equi_join(spark):
     p = plan_of(spark, "events_value_band_join")
     assert "BroadcastNestedLoopJoin" not in p
@@ -480,20 +487,48 @@ def test_unscoped_query_leaves_no_pinned_blocks(spark, name):
 
 def test_eval_substring_decontam_builds_without_jobs(spark, jobs_during):
     # no count barrier while the plan is built, and no finalize write:
-    # the only job is the one every spark.read.parquet runs to read the
-    # footer schema, and the returned frame scans the corpus, not a
+    # once the table's schema is known (a warm-up read), building runs
+    # no job at all, and the returned frame scans the corpus, not a
     # mat_* scratch directory
     from bearysta_spark.tables import load_table
 
-    read = jobs_during(lambda: load_table(spark, SF, "documents"))
+    load_table(spark, SF, "documents")
     built = []
     build = jobs_during(
         lambda: built.append(QUERIES["eval_substring_decontam"](spark, SF))
     )
-    assert build == read
+    assert build == 0
     p = explained(built[0])
     assert "documents.parquet" in p
     assert "mat_" not in p
+
+
+FINALIZED_CLUSTERING = [
+    "dedup_clusters",
+    "dedup_clusters_star",
+    "dedup_canonical_corpus",
+    "dedup_canonical_by_quality",
+    "dedup_cluster_purity",
+]
+
+
+@pytest.mark.parametrize("name", FINALIZED_CLUSTERING)
+def test_finalized_clustering_query_leaves_only_its_result_dir(spark, name):
+    # the components labels directory the build wrote is deleted once
+    # _finalize has copied the result; only mat_*_result is new
+    import os
+
+    from bearysta_spark.scratch import scratch_root
+
+    def mats():
+        root = scratch_root()
+        return set(os.listdir(root)) if os.path.isdir(root) else set()
+
+    before = mats()
+    df = QUERIES[name](spark, SF)
+    new = mats() - before
+    assert len(new) == 1 and re.fullmatch(r"mat_\w+_result", new.pop()), new
+    assert df.count() >= 0
 
 
 def test_image_increment_reads_index_not_corpus(spark):
