@@ -8,10 +8,13 @@ Spark-first shape of the reference's per-file reader (aggregate.py:134-314):
 2. The line-level regex preprocessor (S3) is inherently sequential per
    file (`append` folds a line into the previous line, chains allowed),
    so one byte-range reader (`lines_df`) runs it as an Arrow-batched
-   mapInPandas over driver-planned chunk specs: parallel across files,
-   sequential within a chunk. A file is one whole-file chunk unless the
-   recipe sets `split-files-over-mb`; then a multi-GB log splits at
-   line boundaries and each chunk replays a few lines of context.
+   mapInPandas over driver-planned chunk specs, sequential within a
+   chunk. Its tasks are sized by input bytes (`_PYTHON_TASK_BYTES` a
+   task, up to one per core), since each Python task has a fixed cost:
+   a tree of small runner logs reads in one task. A file is one
+   whole-file chunk unless the recipe sets `split-files-over-mb`; then
+   a multi-GB log splits at line boundaries and each chunk replays a
+   few lines of context.
 3. Executors open the driver's literal (absolute) paths, so a name with
    a space, `%`, `#`, `[` or `{` reads as itself. CSV parsing of
    surviving lines is distributed (`from_csv` per line group), with
@@ -54,6 +57,14 @@ _CHUNK_SPEC = StructType(
         StructField("length", LongType()),
     ]
 )
+# Bytes of log one Python task of the reader takes on. A task of a
+# Python node costs about 0.5 s of fixed CPU (worker set-up plus the JVM
+# side; SCALING.md, execution substrate), and one warm task reads and
+# filters about 9.6 MB/s on the benchmark recipe's six patterns (23.1 MB
+# in 2.40 s, 4-core host). At 32 MiB a task's fixed cost stays under
+# about 15% of its work, and a tree of small runner logs reads in one
+# task instead of one per core.
+_PYTHON_TASK_BYTES = 32 << 20
 _LINES = StructType(
     [
         StructField("path", StringType()),
@@ -168,7 +179,10 @@ def lines_df(
 
     The driver plans byte-range chunk specs from file sizes: one chunk
     per file, or ~chunk_mb ranges when set, so one multi-GB log does not
-    pin a single task. Executors open the driver's literal paths
+    pin a single task. The specs are coalesced to one Python task per
+    `_PYTHON_TASK_BYTES` of chunk bytes (at least one, at most the
+    scan's one per core), so small inputs pay one task's fixed cost,
+    not one per core. Executors open the driver's literal paths
     (_read_chunk) and replay `overlap_lines` (8) of context before each
     chunk so prev-line state (`append` gluing) is reconstructed: a chain
     of consecutive `append` lines longer than that would be mis-glued
@@ -205,7 +219,10 @@ def lines_df(
             yield pd.DataFrame(rows, columns=_LINES.fieldNames() + list(constants))
 
     spec = local_frame(spark, specs, StructType(_CHUNK_SPEC.fields + extra))
-    return spec.mapInPandas(proc, schema=StructType(_LINES.fields + extra))
+    # narrow, so no job; it never raises the count above the scan's
+    # min(specs, defaultParallelism) slices
+    tasks = max(1, -(-sum(length for _, _, _, length, *_ in specs) // _PYTHON_TASK_BYTES))
+    return spec.coalesce(tasks).mapInPandas(proc, schema=StructType(_LINES.fields + extra))
 
 
 def load_sidecars(files: list[str]) -> tuple[list[str], dict[str, list[str | None]]]:
@@ -418,24 +435,31 @@ def _with_lineage(df: DataFrame) -> DataFrame:
     )
 
 
+def _literal(files: list[str]) -> list[str]:
+    """`files` escaped for `spark.read`, which globs every path it is
+    given: a name holding a Hadoop glob character (`\\ * ? [ ] { }`)
+    then matches only itself."""
+    return [re.sub(r"([\\*?\[\]{}])", r"\\\1", f) for f in files]
+
+
 def scan_parquet(spark: SparkSession, files: list[str]) -> DataFrame:
     """Engine extension: parquet input for recipes (the 100 TB path —
     columnar scan with pushdown; lineage via _metadata.file_path)."""
-    return _with_lineage(spark.read.parquet(*files))
+    return _with_lineage(spark.read.parquet(*_literal(files)))
 
 
 def scan_orc(spark: SparkSession, files: list[str]) -> DataFrame:
     """Engine extension: ORC input — the other columnar format with
     native JVM readers (predicate pushdown + column pruning like
     parquet; common in Hive-era lakes). Same lineage columns."""
-    return _with_lineage(spark.read.orc(*files))
+    return _with_lineage(spark.read.orc(_literal(files)))
 
 
 def scan_json(spark: SparkSession, files: list[str]) -> DataFrame:
     """Engine extension: JSON-lines input (runner logs increasingly land
     as JSONL; schema inferred on first read — supply parquet for the
     100 TB path where inference cost matters)."""
-    return _with_lineage(spark.read.json(files))
+    return _with_lineage(spark.read.json(_literal(files)))
 
 
 def scan(spark: SparkSession, recipe: Recipe, inputs: list[str] | None = None) -> DataFrame | None:

@@ -28,12 +28,15 @@ TABLES = (
 
 
 def _norm(v):
+    """One comparable, exactly equal form of a cell: floats compare
+    exactly, every NaN is one value and -0.0 is 0.0 (equal floats must
+    share a `repr`, the sort key of `_rowset`)."""
     if v is None:
         return None
     if isinstance(v, float):
         if math.isnan(v):
             return "NaN"
-        return round(v, 6)
+        return 0.0 if v == 0 else v
     if hasattr(v, "isoformat"):
         return v.isoformat()
     return v

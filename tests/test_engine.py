@@ -7,6 +7,7 @@ our own content) and validated against hand-computed expectations.
 
 from __future__ import annotations
 
+import json
 import math
 import sqlite3
 import textwrap
@@ -623,7 +624,8 @@ def ordered_lines(df):
     return [r["line"] for r in rows]
 
 
-def test_lines_df_matches_python_filter(spark, tmp_path):
+def test_lines_df_matches_python_filter(spark, tmp_path, monkeypatch):
+    from bearysta_spark.engine import sources
     from bearysta_spark.engine.sources import lines_df
 
     # one "large" file with wrapped (append) lines and droppable noise,
@@ -644,17 +646,31 @@ def test_lines_df_matches_python_filter(spark, tmp_path):
         # re-match the glued line so appends are emitted
         r"^row .* tail \d+$": None,
     }
+    other = tmp_path / "other.log"
+    other.write_text("\n".join(lines[::-1]) + "\n")
     want = python_lines(big, filters)
     assert len(want) > 100
-    assert ordered_lines(lines_df(spark, [str(big)], filters)) == want
-    for chunk_bytes in (512, 2048, 5000):
-        got = lines_df(spark, [str(big)], filters, chunk_mb=chunk_bytes / (1024 * 1024))
-        assert ordered_lines(got) == want, chunk_bytes
-
-    # no filters: plain line split must round-trip too
     want2 = python_lines(big, None)
-    for chunk_mb in (None, 1024 / (1024 * 1024)):
-        assert ordered_lines(lines_df(spark, [str(big)], None, chunk_mb=chunk_mb)) == want2
+    both = python_lines(big, filters) + python_lines(other, filters)
+
+    # the default sizing reads this input in one Python task; a few KB a
+    # task spreads the same read over several, in the same order
+    for several in (False, True):
+        if several:
+            monkeypatch.setattr(sources, "_PYTHON_TASK_BYTES", 4096)
+        assert ordered_lines(lines_df(spark, [str(big)], filters)) == want
+        for chunk_bytes in (512, 2048, 5000):
+            got = lines_df(spark, [str(big)], filters, chunk_mb=chunk_bytes / (1024 * 1024))
+            assert ordered_lines(got) == want, chunk_bytes
+            assert (got.rdd.getNumPartitions() > 1) == several, chunk_bytes
+        # whole-file chunks of two files
+        got = lines_df(spark, [str(big), str(other)], filters)
+        assert ordered_lines(got) == both
+        assert got.rdd.getNumPartitions() == (2 if several else 1)
+
+        # no filters: plain line split must round-trip too
+        for chunk_mb in (None, 1024 / (1024 * 1024)):
+            assert ordered_lines(lines_df(spark, [str(big)], None, chunk_mb=chunk_mb)) == want2
 
 
 def test_recipe_split_large_files_equals_wholetext(spark, tmp_path):
@@ -697,6 +713,38 @@ def test_scan_csv_reads_literal_paths(spark, tmp_path, split_mb):
     assert got == sorted(
         (str(d / n), n, str(d), str(i), n, f"t{i}") for i, n in enumerate(ODD_NAMES)
     )
+
+
+def _write_columnar(path, fmt, row):
+    import pyarrow as pa
+
+    table = pa.Table.from_pylist([row])
+    if fmt == "parquet":
+        import pyarrow.parquet as pq
+
+        pq.write_table(table, path)
+    elif fmt == "orc":
+        import pyarrow.orc as orc
+
+        orc.write_table(table, path)
+    else:
+        path.write_text(json.dumps(row) + "\n")
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "json", "orc"])
+def test_columnar_scans_read_literal_paths(spark, tmp_path, fmt):
+    # spark.read globs its paths: `[`/`{` names must still read as themselves
+    from bearysta_spark.engine import sources
+
+    d = tmp_path / "odd dir"
+    d.mkdir()
+    names = [n.replace(".csv", f".{fmt}") for n in ODD_NAMES]
+    for i, name in enumerate(names):
+        _write_columnar(d / name, fmt, {"x": i, "name": name})
+    scan = getattr(sources, f"scan_{fmt}")
+    out = scan(spark, [str(d / n) for n in names]).collect()
+    got = sorted((r["Path"], r["File"], r["Directory"], r["x"], r["name"]) for r in out)
+    assert got == sorted((str(d / n), n, str(d), i, n) for i, n in enumerate(names))
 
 
 @pytest.mark.parametrize("value", ["abc", [1], 0, -1, 1e-9, float("nan"), float("inf"), True])

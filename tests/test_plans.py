@@ -181,6 +181,8 @@ def test_lines_df_plan_is_one_map_over_local_specs(spark, tmp_path):
     assert p.count("MapInPandas") == 1, p
     for node in ("Exchange", "Window", "Join", "CartesianProduct"):
         assert node not in p, p
+    # a small input reads in one Python task, not one per core
+    assert df.rdd.getNumPartitions() == 1
 
 
 def test_bloom_decontam_probe_is_jvm_side(spark):
