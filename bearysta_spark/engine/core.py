@@ -169,11 +169,9 @@ class RecipeEngine:
         recipe: Recipe | dict | str,
         inputs: list[str] | None = None,
         allow_python: bool = False,
-        diagnostics: bool = False,
         _seen: frozenset[str] = frozenset(),
     ):
         self.spark = spark
-        self.diagnostics = diagnostics
         if isinstance(recipe, str):
             recipe = Recipe.load(recipe)
         elif isinstance(recipe, dict):
@@ -465,10 +463,11 @@ class RecipeEngine:
             raise RecipeError(f"Unknown aggregation {r.aggregation!r}")
         values = [v for v in r.values if v in df.columns]
         others = [c for c in df.columns if c not in dims and c not in values]
-        if self.diagnostics and others:
+        if others and logger.isEnabledFor(logging.DEBUG):
             # A5 (reference aggregate.py:723-726): log distinct counts of
-            # columns being aggregated out. approx_count_distinct — at
-            # scale an exact nunique per column is its own shuffle each.
+            # columns being aggregated out. The job exists only for these
+            # debug lines. approx_count_distinct — at scale an exact
+            # nunique per column is its own shuffle each.
             row = df.agg(
                 *[F.approx_count_distinct(qcol(c)).alias(c) for c in others]
             ).collect()[0]

@@ -350,55 +350,18 @@ def scan_csv(
     )
 
 
-def _sqlite_jdbc_available(spark: SparkSession) -> bool:
-    """True when a sqlite JDBC driver is on the executor classpath."""
-    try:
-        spark._jvm.java.lang.Class.forName("org.sqlite.JDBC")  # noqa: SLF001
-        return True
-    except Exception:
-        return False
-
-
 def scan_sqlite(spark: SparkSession, files: list[str], table: str | None) -> DataFrame:
     """S8: sqlite scan (cite aggregate.py:295-314).
 
-    Preferred path is `spark.read.format("jdbc")` per file — the scan
-    then runs executor-side and Catalyst pushes filters/pruning into the
-    JDBC source. A .db file is single-machine data by construction, so
-    each file is a single JDBC partition; parallelism comes from the
-    many-files union, matching the runner layout. When no sqlite JDBC
-    driver jar is on the classpath (this container ships none), falls
-    back to a driver-side sqlite3/pandas read, then parallelizes."""
+    A .db file is single-machine data by construction: each file is read
+    driver-side with sqlite3/pandas, and the concatenated rows become one
+    JVM-local frame (`local_frame`)."""
     if not table:
         raise RecipeError("input.table-name required for sql format")
     # recipe YAML is data, not code: never interpolate an arbitrary
     # string into SQL (the reference shares this flaw; harden here)
     if not re.fullmatch(r"[A-Za-z0-9_]+", table):
         raise RecipeError(f"invalid sqlite table name {table!r}")
-
-    if _sqlite_jdbc_available(spark):
-        frames = []
-        for fn in files:
-            jdf = (
-                spark.read.format("jdbc")
-                .option("url", f"jdbc:sqlite:{fn}")
-                .option("driver", "org.sqlite.JDBC")
-                .option("dbtable", table)
-                .load()
-            )
-            frames.append(
-                jdf.withColumns(
-                    {
-                        "Path": F.lit(fn),
-                        "File": F.lit(os.path.basename(fn)),
-                        "Directory": F.lit(os.path.dirname(fn) or "."),
-                    }
-                )
-            )
-        out = frames[0]
-        for jdf in frames[1:]:
-            out = out.unionByName(jdf, allowMissingColumns=True)
-        return out
 
     import sqlite3
 

@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bearysta_spark.cachescope import scoped_cache
+from bearysta_spark.session import local_frame
 
 logger = logging.getLogger(__name__)
 
@@ -79,9 +80,10 @@ def _drop_hot_keys(
         stats["n_rows"],
     )
     if stats["n_keys"] <= collect_limit:
-        hot_local = frame.sparkSession.createDataFrame(
+        hot_local = local_frame(
+            frame.sparkSession,
             [tuple(r[c] for c in keys) for r in hot.select(*keys).collect()],
-            schema=frame.select(*keys).schema,
+            frame.select(*keys).schema,
         )
         return frame.join(F.broadcast(hot_local), keys, "left_anti")
     logger.warning(
@@ -1253,7 +1255,8 @@ def lsh_banding_curve(
             .alias("__nv"),
         )
     )
-    bands_df = sigs.sparkSession.createDataFrame(
+    bands_df = local_frame(
+        sigs.sparkSession,
         [(int(b), int(num_hashes // b)) for b in bands_list],
         "bands int, rows_per_band int",
     )

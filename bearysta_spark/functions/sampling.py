@@ -14,6 +14,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from bearysta_spark.session import local_frame
+
 
 def stratified_sample(
     df: DataFrame,
@@ -228,13 +230,9 @@ def write_mixture_plan(spark, path: str, rates: list[tuple[str, int]]) -> dict:
     cur = _read_json(path, MIXTURE_META, spark)
     version = (int(cur["version"]) + 1) if cur else 0
     vdir = f"{path}/v{version}"
-    # one parallelize slice, NOT createDataFrame(...).coalesce(1) — the
-    # coalesced single task replays defaultParallelism pickled slices
-    # through serial Python-worker round trips (measured 6-7 s for a
-    # D-row plan vs ~0.4 s; see write_classifier_model)
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(clean, 1), MIXTURE_PLAN_SCHEMA
-    ).write.mode("overwrite").parquet(vdir)
+    # one parquet file per version dir (see write_classifier_model)
+    plan = local_frame(spark, clean, MIXTURE_PLAN_SCHEMA)
+    plan.coalesce(1).write.mode("overwrite").parquet(vdir)
     n = spark.read.schema(MIXTURE_PLAN_SCHEMA).parquet(vdir).count()
     if n != len(clean):
         raise ValueError(

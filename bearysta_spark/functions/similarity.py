@@ -25,6 +25,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
 from bearysta_spark.colnames import qname
+from bearysta_spark.session import local_frame
 
 logger = logging.getLogger(__name__)
 
@@ -653,7 +654,8 @@ def cosine_near_dup_pairs(
             f"to pay the quadratic bill explicitly."
         )
     nblocks = max(1, math.ceil(n / block_rows))
-    grid = spark.createDataFrame(
+    grid = local_frame(
+        spark,
         [(i, j) for i in range(nblocks) for j in range(i, nblocks)],
         "bi int, bj int",
     )

@@ -14,6 +14,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from bearysta_spark.cachescope import scoped_cache
+from bearysta_spark.session import local_frame
 
 TOKEN_PATTERN = "[A-Za-z0-9]+"
 
@@ -723,14 +724,9 @@ def write_classifier_model(
     version = (int(cur["version"]) + 1) if cur else 0
     vdir = f"{path}/v{version}"
     rows = [(d, int(w)) for d, w in enumerate(weights_milli)]
-    # one parallelize slice, NOT createDataFrame(...).coalesce(1): the
-    # default path splits the local rows into defaultParallelism pickled
-    # slices and the coalesced single task then replays every slice
-    # through a Python-worker round trip SERIALLY — measured 6-10 s for
-    # 256 rows vs ~0.4 s for one slice (r14, guide §5 driver work)
-    spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), CLASSIFIER_MODEL_SCHEMA
-    ).write.mode("overwrite").parquet(vdir)
+    # one parquet file per version dir: the serve-side read opens one file
+    model = local_frame(spark, rows, CLASSIFIER_MODEL_SCHEMA)
+    model.coalesce(1).write.mode("overwrite").parquet(vdir)
     n = spark.read.schema(CLASSIFIER_MODEL_SCHEMA).parquet(vdir).count()
     if n != dim:
         raise ValueError(

@@ -35,6 +35,7 @@ from bearysta_spark.operators import (
     ratio_of,
 )
 from bearysta_spark.operators.ratio import percent_diff
+from bearysta_spark.session import local_frame
 from bearysta_spark.tables import _files_fingerprint, load_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -2263,7 +2264,7 @@ def kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [
         (c, d, float(vec[d])) for c, vec in enumerate(cents) for d in range(8)
     ]
-    out = spark.createDataFrame(rows, "cell int, dim int, centroid double")
+    out = local_frame(spark, rows, "cell int, dim int, centroid double")
     return out.select("cell", "dim", F.round("centroid", 6).alias("centroid"))
 
 
@@ -3415,9 +3416,7 @@ def imi_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("method", "probes")
         .agg(F.count("*").cast("long").alias("hits"))
     )
-    cfg = spark.createDataFrame(
-        _RECALL_CONFIGS, "method string, probes int"
-    )
+    cfg = local_frame(spark, _RECALL_CONFIGS, "method string, probes int")
     n = truth.agg(F.count("*").cast("long").alias("n_expected"))
     return (
         cfg.join(hits, ["method", "probes"], "left")
@@ -7686,7 +7685,7 @@ def _residual_recall_df(
     cells = [(arm, int(p)) for arm, _, _, _ in arms for p in _RES_PROBES]
     if coarse_exact:
         cells += [("coarse_seeded_exact", 4), ("coarse_trained_exact", 4)]
-    cells_df = spark.createDataFrame(cells, "arm string, probes int")
+    cells_df = local_frame(spark, cells, "arm string, probes int")
     hits_agg = (
         allk.join(
             truth.withColumn("__t", F.lit(1)), ["qid", "nid"], "left"
@@ -9078,8 +9077,8 @@ def quality_classifier_train_curve(
         (r, n_mis, sum(abs(x) for x in w), sum(w))
         for r, n_mis, w in hist
     ]
-    return spark.createDataFrame(
-        rows, "round long, n_mis long, w_l1 long, w_sum long"
+    return local_frame(
+        spark, rows, "round long, n_mis long, w_l1 long, w_sum long"
     ).orderBy("round")
 
 
@@ -9204,7 +9203,7 @@ def quality_classifier_calibration(
         d.select("doc_id", y.alias("y")), "doc_id"
     )
     taus = F.broadcast(
-        spark.createDataFrame([(t,) for t in _CLF_TAU_GRID], "tau long")
+        local_frame(spark, [(t,) for t in _CLF_TAU_GRID], "tau long")
     )
     kept = F.col("margin_milli") >= F.col("tau")
     return (
@@ -9281,8 +9280,8 @@ def quality_classifier_bigram_train_curve(
         (r, n_mis, sum(abs(x) for x in w), sum(w))
         for r, n_mis, w in hist
     ]
-    return spark.createDataFrame(
-        rows, "round long, n_mis long, w_l1 long, w_sum long"
+    return local_frame(
+        spark, rows, "round long, n_mis long, w_l1 long, w_sum long"
     ).orderBy("round")
 
 
@@ -9392,7 +9391,7 @@ def quality_classifier_bigram_calibration(
         d.select("doc_id", y.alias("y")), "doc_id"
     )
     taus = F.broadcast(
-        spark.createDataFrame([(t,) for t in _CLF_TAU_GRID], "tau long")
+        local_frame(spark, [(t,) for t in _CLF_TAU_GRID], "tau long")
     )
     kept = F.col("margin_milli") >= F.col("tau")
     return (
@@ -10104,8 +10103,8 @@ def sparse_knn_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("dsz")
         .agg(F.count("*").cast("long").alias("__hits"))
     )
-    dims_df = spark.createDataFrame(
-        [(int(dim),) for dim in _SPARSE_RECALL_DIMS], "dim int"
+    dims_df = local_frame(
+        spark, [(int(dim),) for dim in _SPARSE_RECALL_DIMS], "dim int"
     )
     return (
         dims_df.join(hits, dims_df["dim"] == hits["dsz"], "left")
@@ -10628,7 +10627,8 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     occ = TK.word_occurrences(_t(spark, sf_dir, "documents"))
     words = occ.groupBy("word").agg(F.count("*").cast("long").alias("freq"))
     merges = TK.bpe_train(words, num_merges=10)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(i + 1, a, b, c) for i, (a, b, c) in enumerate(merges)],
         "rank long, left string, right string, pair_count long",
     ).orderBy("rank")
@@ -11764,8 +11764,8 @@ def unigram_train_pieces(spark: SparkSession, sf_dir: str) -> DataFrame:
     occ = TK.word_occurrences(_t(spark, sf_dir, "documents"))
     words = occ.groupBy("word").agg(F.count("*").cast("long").alias("freq"))
     pieces = TK.unigram_train(words)
-    return spark.createDataFrame(
-        pieces, "piece string, cost long, cnt long"
+    return local_frame(
+        spark, pieces, "piece string, cost long, cnt long"
     ).orderBy("piece")
 
 
@@ -12505,7 +12505,8 @@ def unimax_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     )
     rows = _unimax_waterfill([(r["lang"], int(r["tok"])) for r in lt])
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "lang string, n_tokens long, cap long, alloc long,"
         " epochs_ppm long, capped int, rnd int",
@@ -13137,7 +13138,8 @@ def doremi_domain_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame. Consumers broadcast-join the D-row plan to drive
     per-domain sampling rates."""
     rows = _doremi_eg(_doremi_loss_rows(spark, sf_dir))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "source string, n_tokens long, loss_mb long, weight long,"
         " alpha_ppm long, smooth_ppm long",
@@ -13216,8 +13218,10 @@ def doremi_trained_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         if k in nd
     ]
     rf = F.broadcast(
-        spark.createDataFrame(
-            rates, "dom string, n_docs long, smooth_ppm long, rate_ppm long"
+        local_frame(
+            spark,
+            rates,
+            "dom string, n_docs long, smooth_ppm long, rate_ppm long",
         )
     )
     # the ONE residue definition shared with the streaming mixture
@@ -13303,7 +13307,8 @@ def doremi_plan_persisted_sample(
         .agg(F.count("*").cast("long").alias("kept"))
     )
     meta_rows = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(k, nd[k], plan[k]) for k, _ in rates],
             "dom string, n_docs long, smooth_ppm long",
         )
@@ -13685,7 +13690,7 @@ def pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings")
     mu, v, last_nm = _pca_fit(e)
     rows = [(dim, v[dim], last_nm) for dim in range(64)]
-    out = spark.createDataFrame(rows, "dim int, loading double, eig double")
+    out = local_frame(spark, rows, "dim int, loading double, eig double")
     return out.select(
         "dim",
         F.round("loading", 6).alias("loading"),

@@ -31,6 +31,7 @@ import os
 import shutil
 import tempfile
 import uuid
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame
 
@@ -113,12 +114,13 @@ def cleanup(df: DataFrame) -> None:
 
 def path_of(df: DataFrame) -> str | None:
     """The scratch path behind a frame `materialize_distributed`
-    returned (for the `replaces` handoff), else None."""
+    returned (for the `replaces` handoff), else None. A `file:` URI is
+    decoded to its filesystem path, so a space, `%` or `#` in the
+    scratch root reads as itself; other schemes keep their URI."""
     files = df.inputFiles()
     if not files:
         return None
     d = os.path.dirname(files[0])
-    base = os.path.basename(d)
-    if base.startswith(f"mat_{_RUN}_"):
-        return d.removeprefix("file:")
-    return None
+    if not os.path.basename(d).startswith(f"mat_{_RUN}_"):
+        return None
+    return unquote(urlparse(d).path) if d.startswith("file:") else d

@@ -57,7 +57,7 @@ def get_spark(app_name: str = "bearysta_spark", cpus: int | None = None) -> Spar
 def local_frame(
     spark: SparkSession,
     rows: Sequence[Sequence[object]] | pd.DataFrame | pa.Table,
-    schema: StructType | None = None,
+    schema: StructType | str | None = None,
 ) -> DataFrame:
     """A small driver-built frame that stays inside the JVM.
 
@@ -72,18 +72,34 @@ def local_frame(
     or an Arrow table; for a pandas frame `schema` may be omitted, and
     the column types are then Arrow's inference from its dtypes (what
     `createDataFrame` infers with the Arrow conf on).
+
+    `schema` is a `StructType` or a DDL string such as `"k string, n
+    long"`, read by `StructType.fromDDL` (every field nullable, as
+    `createDataFrame` reads it). Row values convert through pyarrow; a
+    value that does not fit its column's type raises rather than change
+    (`2.0` fills a `long` column, `1.5` raises).
     """
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
     if isinstance(rows, pa.Table):
         return spark.createDataFrame(rows, schema=schema)
     if isinstance(rows, pd.DataFrame):
         table = pa.Table.from_pandas(rows, preserve_index=False)
         return spark.createDataFrame(table, schema=schema)
     if schema is None:
-        raise TypeError("local_frame needs a StructType schema for row input")
+        raise TypeError("local_frame needs a schema (StructType or DDL) for row input")
     arrow_schema = to_arrow_schema(schema)
     columns = list(zip(*rows)) if rows else [()] * len(schema.fields)
     table = pa.Table.from_arrays(
-        [pa.array(list(c), type=f.type) for c, f in zip(columns, arrow_schema)],
+        [_arrow_column(list(c), f.type) for c, f in zip(columns, arrow_schema)],
         schema=arrow_schema,
     )
     return spark.createDataFrame(table, schema=schema)
+
+
+def _arrow_column(values: list[object], typ: pa.DataType) -> pa.Array:
+    # converting to an integer type, pyarrow truncates a Python float
+    # silently (1.5 -> 1); converting untyped and casting safely raises
+    if pa.types.is_integer(typ):
+        return pa.array(values).cast(typ)
+    return pa.array(values, type=typ)

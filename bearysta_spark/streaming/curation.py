@@ -48,6 +48,7 @@ import logging
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bearysta_spark.session import local_frame
 from bearysta_spark.streaming.index import (
     bloom_rows,
     compact_index,
@@ -226,7 +227,8 @@ def cap_cumulative_buckets(
             "with stream age",
             nk, max_bucket_size, mx, nr,
         )
-        hot_local = bb.sparkSession.createDataFrame(
+        hot_local = local_frame(
+            bb.sparkSession,
             [(r["band"], r["bucket"]) for r in hot_rows],
             bb.select("band", "bucket").schema,
         )

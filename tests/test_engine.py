@@ -550,6 +550,27 @@ def test_dotted_dimension_names(spark, tmp_path, caplog):
     assert icx[2000]["slow_Time.s"] is None
 
 
+def test_aggregated_out_columns_logged_only_at_debug(spark, tmp_path, caplog, jobs_during):
+    # A5: the distinct-count job exists only to feed logger.debug, so it
+    # runs exactly when the engine logger is enabled for DEBUG
+    write(tmp_path / "d.csv", "Algo,Size,Time,Host\na,1,2.0,h1\na,1,4.0,h2\n")
+    recipe = {
+        "input": {"path": str(tmp_path / "d.csv"), "format": "csv"},
+        "aggregation": "mean",
+        "series": ["Algo"],
+        "axis": ["Size"],
+        "values": ["Time"],
+    }
+    eng = RecipeEngine(spark, recipe)
+    df = eng.normalized()
+    with caplog.at_level("WARNING", logger="bearysta_spark.engine"):
+        assert jobs_during(lambda: eng.aggregated(df)) == 0
+    assert not [m for m in caplog.messages if "Aggregated out column" in m]
+    with caplog.at_level("DEBUG", logger="bearysta_spark.engine"):
+        assert jobs_during(lambda: eng.aggregated(df)) >= 1
+    assert 'Aggregated out column "Host" with ~2 unique values' in caplog.messages
+
+
 # ---------------------------------------------------------------------------
 # P5: general tuple merge-back (ref aggregate.py:500-506)
 # ---------------------------------------------------------------------------

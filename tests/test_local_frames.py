@@ -1,10 +1,13 @@
-"""Driver-built frames on the recipe path stay JVM-local.
+"""Driver-built frames stay JVM-local.
 
 `createDataFrame` over a Python list plans a `LogicalRDD` over a
 `PythonRDD`, so every action that reads it opens a stage of Python
 workers replaying the pickled rows. `session.local_frame` builds a
-`LocalRelation` instead; these tests pin that for the helper and for
-every frame the recipe engine builds on the driver.
+`LocalRelation` instead; these tests pin that for the helper, for
+every frame the recipe engine builds on the driver and for registered
+queries that return driver-computed model state, and a source guard
+keeps every other way of putting driver rows into a plan out of the
+package.
 """
 
 from __future__ import annotations
@@ -12,11 +15,14 @@ from __future__ import annotations
 import pathlib
 import re
 
+import pyarrow as pa
 import pytest
 from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
 
+from bearysta_spark.cachescope import cache_scope
 from bearysta_spark.engine.sources import lines_df, scan_csv
 from bearysta_spark.operators import expected_fill
+from bearysta_spark.queries import RAW_QUERIES
 from bearysta_spark.session import local_frame
 
 PACKAGE = pathlib.Path(__file__).resolve().parent.parent / "bearysta_spark"
@@ -50,6 +56,25 @@ def test_local_frame_is_local_relation_whatever_the_arrow_conf(spark, arrow):
     assert [tuple(r) for r in df.collect()] == [("a", 1), (None, 2)]
     assert empty.schema == schema and empty.count() == 0
     assert dict(pdf.dtypes) == {"k": "string", "n": "bigint"}
+
+
+def test_local_frame_reads_a_ddl_schema_as_create_dataframe_does(spark):
+    ddl = "k string, n long, x double, i int"
+    rows = [("a", 1, 0.5, 2), (None, None, None, None)]
+    got = local_frame(spark, rows, ddl)
+    want = spark.createDataFrame(rows, ddl)
+    assert_jvm_local(got)
+    assert got.schema == want.schema
+    assert all(f.nullable for f in got.schema.fields)
+    assert got.collect() == want.collect()
+
+
+def test_local_frame_raises_on_a_lossy_value(spark):
+    assert local_frame(spark, [(2.0,), (None,)], "n long").collect() == [(2,), (None,)]
+    with pytest.raises(pa.ArrowInvalid, match="truncated"):
+        local_frame(spark, [(1.5,)], StructType([StructField("n", LongType())]))
+    with pytest.raises(pa.ArrowInvalid):
+        local_frame(spark, [(2**40,)], "n int")
 
 
 def test_local_frame_rows_need_a_schema(spark):
@@ -110,22 +135,43 @@ def test_empty_scan_frame_is_local(spark, tmp_path):
     assert out.columns == ["Path"] and out.count() == 0
 
 
+@pytest.mark.parametrize(
+    "name", ["pca_top_component", "unimax_mixture_plan", "doremi_domain_weights"]
+)
+def test_driver_model_state_queries_build_local_frames(spark, sf_dir, name):
+    # these queries return rows computed on the driver; the raw plan
+    # reads them as a local table, not through a Python RDD
+    with cache_scope() as scope:
+        df = RAW_QUERIES[name](spark, sf_dir)
+    try:
+        assert_jvm_local(df)
+    finally:
+        scope.release()
+
+
 def test_no_bare_create_dataframe_on_the_recipe_path():
-    # every driver-built frame in these packages goes through local_frame,
-    # and no column name is spliced into an expression string
+    # every driver-built frame in the package goes through local_frame;
+    # on the recipe path (engine/, operators/) no column name is spliced
+    # into an expression string either
+    def recipe_path_offence(sub: str, line: str) -> bool:
+        return (
+            # the recipe CSV scan opens literal paths itself: a Hadoop
+            # text read percent-encodes or re-globs odd file names
+            (sub == "engine" and ("spark.read.text(" in line or "input_file_name(" in line))
+            # a column name interpolated into SQL text breaks on a
+            # backtick; recipe-named columns go through qcol
+            or 'F.expr(f"' in line
+            or 'selectExpr(f"' in line
+        )
+
     offenders = [
-        f"{path.relative_to(PACKAGE)}:{i}"
-        for sub in ("engine", "operators")
-        for path in sorted((PACKAGE / sub).rglob("*.py"))
+        f"{rel}:{i}"
+        for path in sorted(PACKAGE.rglob("*.py"))
+        if (rel := path.relative_to(PACKAGE)).as_posix() != "session.py"
         for i, line in enumerate(path.read_text().splitlines(), 1)
         if "createDataFrame(" in line
-        # the recipe CSV scan opens literal paths itself: a Hadoop text
-        # read percent-encodes or re-globs odd file names
-        or (sub == "engine" and ("spark.read.text(" in line or "input_file_name(" in line))
-        # a column name interpolated into SQL text breaks on a backtick;
-        # recipe-named columns go through qcol
-        or 'F.expr(f"' in line
-        or 'selectExpr(f"' in line
+        or "sparkContext.parallelize(" in line
+        or (rel.parts[0] in ("engine", "operators") and recipe_path_offence(rel.parts[0], line))
     ]
     assert not offenders, offenders
 

@@ -391,7 +391,7 @@ SCAN_BUDGETS = [
     ("unigram_viterbi_stats", "documents", 2),
     # (trainer queries returning driver model state — bpe_train_merges,
     # unigram_train_pieces — are not pinnable here: their returned frame
-    # is a local createDataFrame with no corpus scan in its plan; the
+    # is a local_frame with no corpus scan in its plan; the
     # unigram trainer's one-corpus-pass contract is accumulator-tested
     # in test_tokenize.py instead)
 ]

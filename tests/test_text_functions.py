@@ -398,12 +398,12 @@ def test_classifier_model_roundtrip_and_versioning(spark, tmp_path):
 
 
 def test_model_artifact_written_as_single_file(spark, tmp_path):
-    """The r14 write-path change (one parallelize slice instead of
-    createDataFrame(...).coalesce(1), which replayed every pickled
-    local slice through serial Python-worker round trips): the
-    published artifact must still be ONE parquet data file per version
-    dir — single-file model artifacts are the read-side contract
-    (bounded open cost at serve time) that coalesce(1) existed for."""
+    """The writers build their rows as a JVM-local frame (`local_frame`)
+    and coalesce it to one partition, which replays nothing through
+    Python workers: the published artifact must be ONE parquet data
+    file per version dir — single-file model artifacts are the
+    read-side contract (bounded open cost at serve time) that
+    coalesce(1) exists for."""
     import glob
     import os
 
